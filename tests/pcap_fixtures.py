@@ -110,12 +110,12 @@ def build_vlan_ipv4_tcp(
     return eth + tag + ip + tcp
 
 
-def pcapng_block(btype: int, body: bytes) -> bytes:
+def pcapng_block(btype: int, body: bytes, endian: str = "<") -> bytes:
     pad = (-len(body)) % 4
     total = 12 + len(body) + pad
     return (
-        struct.pack("<II", btype, total) + body + bytes(pad)
-        + struct.pack("<I", total)
+        struct.pack(endian + "II", btype, total) + body + bytes(pad)
+        + struct.pack(endian + "I", total)
     )
 
 

@@ -848,6 +848,30 @@ def test_frozen_size_replays_identically_after_growth(tmp_path):
     assert live == [2000, 2001, 2002, 2003, 2004]
 
 
+def test_pcapng_frozen_size_replays_identically_after_growth(tmp_path):
+    """pcapng twin of the frozen-size replay contract: a block whose
+    header precedes the plan-frozen EOF but whose bytes extend past it
+    stays excluded after the capture grows."""
+    frames = [
+        (float(i), build_eth_ipv4_udp("10.0.0.1", "10.0.0.2", 2000 + i,
+                                      53, b"y" * 40))
+        for i in range(5)
+    ]
+    full = build_pcapng(frames)
+    cut = len(full) - 20  # 5th EPB header whole, its data partial
+    p = tmp_path / "grow.pcapng"
+    p.write_bytes(full[:cut])
+    original = [x["udp.srcport"]
+                for x in iter_packets(str(p), 0, cut, size=cut)]
+    assert original == [2000, 2001, 2002, 2003]
+    p.write_bytes(full)
+    replay = [x["udp.srcport"]
+              for x in iter_packets(str(p), 0, cut, size=cut)]
+    assert replay == original
+    live = [x["udp.srcport"] for x in iter_packets(str(p))]
+    assert live == [2000, 2001, 2002, 2003, 2004]
+
+
 def test_single_slice_plan_keeps_ordinal_frame_numbers(tmp_path):
     """frame.number semantics must not depend on the FORMAT for the same
     plan (r12 review: a one-slice plan — start == GLOBAL_HEADER_LEN —
@@ -896,12 +920,12 @@ def test_pcapng_unsplit_fallback_tiny_slices_no_duplication(tmp_path):
     ]
     assert got == whole  # exactly once — no preamble-straddling dupes
 
-    # extract_pcapng_slice twin: only the first slice materializes rows
-    from wireduck_spark.sources.native import extract_pcapng_slice
+    # extract_slice twin: only the first slice materializes rows
+    from wireduck_spark.sources.native import extract_slice
     owned = []
     for i, (s, e) in enumerate(parts):
         out = tmp_path / f"slice_{i}.pcapng"
-        offs = extract_pcapng_slice(str(p), s, e, str(out))
+        offs = extract_slice(str(p), s, e, str(out))
         owned.append(len(offs))
     assert owned[0] == 3 and sum(owned) == 3
 
@@ -941,12 +965,136 @@ def test_pcapng_unsplit_read_skips_oversized_block(tmp_path, monkeypatch):
     assert ports2 == [4000]
 
     # extract twin: the skipped block is not copied, both EPBs are
-    from wireduck_spark.sources.native import extract_pcapng_slice
+    from wireduck_spark.sources.native import extract_slice
     out = tmp_path / "giant_slice.pcapng"
-    offs = extract_pcapng_slice(str(p), None, None, str(out))
+    offs = extract_slice(str(p), None, None, str(out))
     assert len(offs) == 2
     ports3 = [x["udp.srcport"] for x in iter_packets(str(out))]
     assert ports3 == [4000, 4001]
+
+
+def _shb(endian):
+    from tests.pcap_fixtures import pcapng_block
+    import struct as st
+
+    return pcapng_block(0x0A0D0D0A, st.pack(endian + "IHHq", 0x1A2B3C4D,
+                                             1, 0, -1), endian)
+
+
+def _idb(endian, linktype, tsresol=None):
+    from tests.pcap_fixtures import pcapng_block
+    import struct as st
+
+    body = st.pack(endian + "HHI", linktype, 0, 65535)
+    if tsresol is not None:  # if_tsresol option, then opt_endofopt
+        body += st.pack(endian + "HH", 9, 1) + bytes([tsresol, 0, 0, 0])
+        body += st.pack(endian + "HH", 0, 0)
+    return pcapng_block(0x00000001, body, endian)
+
+
+def _epb(endian, if_id, ticks, data, orig=None):
+    from tests.pcap_fixtures import pcapng_block
+    import struct as st
+
+    return pcapng_block(0x00000006, st.pack(
+        endian + "IIIII", if_id, ticks >> 32, ticks & 0xFFFFFFFF, len(data),
+        len(data) if orig is None else orig) + data, endian)
+
+
+def test_pcapng_framing_goldens(tmp_path):
+    """Pinned pcapng framing: a little-endian section (Ethernet, us)
+    then a big-endian SHB section whose interface 0 is raw IP (linktype
+    101) in nanoseconds (if_tsresol=9) and interface 1 Ethernet in us;
+    EPBs on both, an SPB (interface 0, no timestamp), an EPB naming an
+    unknown interface (Ethernet, us) and NRB/ISB blocks between
+    packets. Goldens are per-packet frame.len, frame.cap_len, epoch us
+    and linktype on a whole-file read; extract_slice copies the file
+    verbatim."""
+    import struct as st
+
+    from tests.pcap_fixtures import pcapng_block
+    from wireduck_spark.sources.native import (
+        extract_slice, open_record_batches,
+    )
+
+    f1 = build_eth_ipv4_udp("10.0.0.1", "10.0.0.2", 5001, 53, b"a" * 10)
+    f2 = build_eth_ipv4_udp("10.0.0.1", "10.0.0.2", 5002, 53, b"b" * 20)
+    raw_ip = build_eth_ipv4_tcp("10.0.0.3", "10.0.0.4", 40000, 80, 1, 0,
+                                0x18, b"c" * 6)[14:]
+    f3 = build_eth_ipv4_tcp("10.0.0.3", "10.0.0.4", 40000, 80, 7, 0, 0x18,
+                            b"GET / HTTP/1.1\r\n\r\n")
+    f4 = build_eth_ipv4_udp("10.0.0.1", "10.0.0.2", 5004, 53, b"d" * 5)
+    f5 = build_eth_ipv4_udp("10.0.0.1", "10.0.0.2", 5005, 53, b"e" * 8)
+    blocks = [
+        _shb("<"), _idb("<", 1),
+        _epb("<", 0, 1_700_000_000_000_000, f1),
+        pcapng_block(0x00000004, bytes(8)),  # NRB
+        _epb("<", 0, 1_700_000_000_500_000, f2, orig=len(f2) + 10),
+        _shb(">"), _idb(">", 101, tsresol=9), _idb(">", 1),
+        _epb(">", 0, 1_700_000_001_000_000_999, raw_ip),
+        _epb(">", 1, 1_700_000_002_000_000, f3),
+        pcapng_block(0x00000005, bytes(20), ">"),  # ISB
+        pcapng_block(0x00000003, st.pack(">I", len(f4)) + f4, ">"),  # SPB
+        _epb(">", 7, 3_000_000, f5),
+    ]
+    p = tmp_path / "two_sections.pcapng"
+    p.write_bytes(b"".join(blocks))
+    want = [  # (frame.len, frame.cap_len, epoch us, linktype)
+        (52, 52, 1_700_000_000_000_000, 1),
+        (72, 62, 1_700_000_000_500_000, 1),
+        (46, 46, 1_700_000_001_000_000, 101),
+        (72, 72, 1_700_000_002_000_000, 1),
+        (47, 47, 0, 101),
+        (50, 50, 3_000_000, 1),
+    ]
+    (batch,), split = open_record_batches(str(p))
+    offs, epochs, incls, origs, _datas, lts = batch
+    assert not split
+    assert lts == [1, 1, 101, 1, 101, 1]  # mixed batch: per-packet list
+    assert list(zip(origs, incls, epochs, lts)) == want
+    pkts = list(iter_packets(str(p), raw_ts=True))
+    assert [(x["frame.len"], x["frame.cap_len"], x["frame.time_epoch"])
+            for x in pkts] == [w[:3] for w in want]
+    assert [x["frame.number"] for x in pkts] == [1, 2, 3, 4, 5, 6]
+    assert [x["frame.protocols"] == "raw" for x in pkts] == [
+        False, False, True, False, True, False]
+    assert pkts[3]["http.request.method"] == "GET"
+
+    out = tmp_path / "copy.pcapng"
+    assert extract_slice(str(p), None, None, str(out)) == offs
+    assert out.read_bytes() == p.read_bytes()
+
+
+def test_pcapng_two_interface_split_union_equals_whole(tmp_path):
+    """One section, two interfaces (Ethernet in us, Ethernet in ns) with
+    NRBs between packets: the union of every byte-range split read equals
+    the whole-file read, frame.number aside (offsets vs ordinals)."""
+    from tests.pcap_fixtures import pcapng_block
+
+    blocks = [_shb("<"), _idb("<", 1), _idb("<", 1, tsresol=9)]
+    for i in range(60):
+        frame = build_eth_ipv4_udp("10.0.0.1", "10.0.0.2", 6000 + i, 53,
+                                   bytes([i]) * (i % 50))
+        ticks = (1_700_000_000 + i) * (10 ** (6 + 3 * (i % 2))) + i
+        blocks.append(_epb("<", i % 2, ticks, frame))
+        if i % 9 == 0:
+            blocks.append(pcapng_block(0x00000004, bytes(12)))
+    p = tmp_path / "two_if.pcapng"
+    p.write_bytes(b"".join(blocks))
+
+    def rows(pkts):
+        return [{k: v for k, v in x.items() if k != "frame.number"}
+                for x in pkts]
+
+    whole = rows(iter_packets(str(p)))
+    assert len(whole) == 60
+    # interface 1 counts nanoseconds: packet 1 lands exactly 1 s later
+    assert (whole[1]["frame.time_epoch"] - whole[0]["frame.time_epoch"]
+            ).total_seconds() == 1
+    for n in (2, 3, 5, 8):
+        parts = byte_range_partitions(str(p), n)
+        got = [x for s, e in parts for x in rows(iter_packets(str(p), s, e))]
+        assert got == whole, n
 
 
 def test_dns_name_depth_exhaustion_advances_past_pointer():

@@ -2,7 +2,7 @@
 
 native_vec.batch_columns must be BIT-IDENTICAL to the per-packet dict
 path (native.iter_packets + per-column appends) on every fixture
-capture, every schema, split reads, limits, and pcapng — the
+capture in both framings, every schema, split reads and limits — the
 vectorized fast path covers plain Ethernet/IPv4/TCP + header-only UDP
 and everything else falls back to dissect_packet per row, so any
 drift between the two paths is a bug in the fast path's masks or
@@ -23,6 +23,7 @@ from tests.pcap_fixtures import (
     build_pcapng,
     dns_query_payload,
 )
+from tests.test_native import FIXTURE
 from wireduck_spark.sources import native
 from wireduck_spark.sources.pcap import (
     ARROW_BATCH_ROWS,
@@ -75,21 +76,44 @@ def _pydicts(batches):
     return [b.to_pydict() for b in batches]
 
 
-def _all_captures():
-    caps = ["/root/reference/fix.pcap"]
-    if os.path.isdir(CACHE):
-        for root, _dirs, files in os.walk(CACHE):
-            for f in sorted(files):
-                if f.endswith(".pcap"):
-                    caps.append(os.path.join(root, f))
-    # the 200k-row throughput capture is covered by the split/limit
-    # tests below with a row cap; drop it from the full sweep for time
-    return [c for c in caps if "throughput" not in c]
+def _classic_frames(path):
+    """[(epoch_s, frame)] of a little-endian microsecond classic capture
+    (the framing synth.write_pcap emits), parsed independently of the
+    reader under test."""
+    with open(path, "rb") as fh:
+        raw = fh.read()
+    frames, off = [], 24
+    while off + 16 <= len(raw):
+        sec, usec, incl, _ = struct.unpack_from("<IIII", raw, off)
+        frames.append((sec + usec / 1e6, raw[off + 16:off + 16 + incl]))
+        off += 16 + incl
+    return frames
+
+
+def _all_captures(tmp_path):
+    """The fixture capture when present, plus every synth.*_capture
+    builder written in both classic and pcapng framing. The throughput
+    builder runs at 5000 packets, so one capture crosses an
+    ARROW_BATCH_ROWS batch boundary in each framing."""
+    from wireduck_spark.sources import synth
+
+    caps = [FIXTURE] if os.path.exists(FIXTURE) else []
+    for name in sorted(n for n in dir(synth) if n.endswith("_capture")):
+        classic = str(tmp_path / f"{name}.pcap")
+        if name == "throughput_capture":
+            synth.throughput_capture(classic, n_packets=5000)
+        else:
+            getattr(synth, name)(classic)
+        png = str(tmp_path / f"{name}.pcapng")
+        with open(png, "wb") as fh:
+            fh.write(build_pcapng(_classic_frames(classic)))
+        caps += [classic, png]
+    return caps
 
 
 @pytest.mark.parametrize("proto_opt", ["all", "tcp"])
-def test_vec_matches_dict_path_on_every_capture(proto_opt):
-    for cap in _all_captures():
+def test_vec_matches_dict_path_on_every_capture(proto_opt, tmp_path):
+    for cap in _all_captures(tmp_path):
         ds = PcapDataSource({"path": cap, "engine": "native",
                              "protocols": proto_opt})
         schema = ds.schema()
@@ -118,8 +142,8 @@ def test_vec_matches_dict_path_split_and_limit():
 
 
 def test_vec_matches_dict_path_pcapng(tmp_path):
-    # pcapng batches through open_record_batches' per-record branch;
-    # mixes fast-path TCP, header-only UDP and a fallback (DNS) row
+    # pcapng through the shared batched record core; mixes fast-path
+    # TCP, header-only UDP and a fallback (DNS) row
     frames = [
         build_eth_ipv4_tcp("10.0.0.1", "10.0.0.2", 40000, 80, 1, 0,
                            0x18, b"GET / HTTP/1.1\r\nHost: x\r\n\r\n"),

@@ -168,7 +168,7 @@ def test_extract_classic_slice_is_standalone(tmp_path):
     (byte-identical records, original header preserved), offsets are the
     records' original byte positions."""
     from wireduck_spark.sources.native import (
-        byte_range_partitions, extract_classic_slice, iter_packets,
+        byte_range_partitions, extract_slice, iter_packets,
     )
     from tests.pcap_fixtures import build_eth_ipv4_tcp, build_pcap
 
@@ -184,7 +184,7 @@ def test_extract_classic_slice_is_standalone(tmp_path):
     all_offsets, all_pkts = [], []
     for j, (s, e) in enumerate(byte_range_partitions(str(p), 4)):
         out = tmp_path / f"slice{j}.pcap"
-        offs = extract_classic_slice(str(p), s, e, str(out))
+        offs = extract_slice(str(p), s, e, str(out))
         all_offsets.extend(offs)
         sliced = list(iter_packets(str(out)))
         assert len(sliced) == len(offs)
@@ -243,7 +243,7 @@ def test_extract_pcapng_slice_is_standalone(tmp_path):
     alone; packet-block offsets are returned in order. Also exercises
     SPB-only captures and mid-file filler blocks (NRB runs)."""
     from wireduck_spark.sources.native import (
-        byte_range_partitions, extract_pcapng_slice, iter_packets,
+        byte_range_partitions, extract_slice, iter_packets,
     )
     from tests.pcap_fixtures import build_eth_ipv4_tcp, build_pcapng
 
@@ -261,7 +261,7 @@ def test_extract_pcapng_slice_is_standalone(tmp_path):
         all_offsets, all_pkts = [], []
         for j, (s, e) in enumerate(byte_range_partitions(str(p), 4)):
             out = tmp_path / f"slice_{variant}{j}.pcapng"
-            offs = extract_pcapng_slice(str(p), s, e, str(out))
+            offs = extract_slice(str(p), s, e, str(out))
             sliced = list(iter_packets(str(out)))
             assert len(sliced) == len(offs)
             all_offsets.extend(offs)

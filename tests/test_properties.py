@@ -119,6 +119,46 @@ def test_iter_packets_never_raises_on_corrupt_captures(blob):
     os.unlink(path)
 
 
+@settings(max_examples=50, deadline=None)
+@given(st.binary(min_size=0, max_size=400), st.integers(0, 1 << 16),
+       st.integers(1, 5))
+def test_pcapng_reads_never_raise_on_corrupt_captures(blob, cut, n_slices):
+    """pcapng twin of the corrupt-capture property: a valid SHB + IDB
+    glued to arbitrary bytes, and a valid capture truncated at an
+    arbitrary byte past its magic, never raise out of iter_packets or
+    extract_slice — whole-file or split — since the chunked block walk
+    reads untrusted input."""
+    import os
+    import tempfile
+
+    from tests.pcap_fixtures import build_pcapng
+    from wireduck_spark.sources.native import extract_slice
+
+    frames = [
+        (1700000000.0 + i,
+         build_eth_ipv4_tcp("10.0.0.1", "10.0.0.2", 1111, 80, i, 0, 0x18,
+                            blob[:i * 7]))
+        for i in range(6)
+    ]
+    valid = build_pcapng(frames)
+    glued = build_pcapng([]) + blob
+    truncated = valid[:4 + cut % (len(valid) - 3)]
+    tmp = tempfile.mkdtemp()
+    for k, content in enumerate((glued, truncated)):
+        path = os.path.join(tmp, f"cap{k}.pcapng")
+        with open(path, "wb") as fh:
+            fh.write(content)
+        spans = [(None, None)] + byte_range_partitions(path, n_slices)
+        for j, (s, e) in enumerate(spans):
+            for fields in iter_packets(path, s, e):
+                assert fields["frame.cap_len"] >= 0
+            out = os.path.join(tmp, f"slice{k}_{j}.pcapng")
+            extract_slice(path, s, e, out)
+            os.unlink(out)
+        os.unlink(path)
+    os.rmdir(tmp)
+
+
 @settings(max_examples=25, deadline=None)
 @given(
     st.lists(st.binary(min_size=0, max_size=60), min_size=1, max_size=20),
@@ -173,16 +213,14 @@ def test_pcapng_split_union_equals_whole_file(payloads, n_slices, spb):
 def test_slice_extraction_union_equals_whole_file(payloads, n_slices, png):
     """The split-tshark extraction invariant, fuzzed: for any capture
     content and slice count, the per-slice standalone mini-captures
-    (extract_classic_slice / extract_pcapng_slice) together contain
+    (extract_slice, either format) together contain
     exactly the whole file's packets — each temp capture re-dissects
     independently (that is what the per-slice tshark pipe consumes), and
     the returned offsets are strictly increasing across slices."""
     import os
     import tempfile
 
-    from wireduck_spark.sources.native import (
-        extract_classic_slice, extract_pcapng_slice,
-    )
+    from wireduck_spark.sources.native import extract_slice
     from tests.pcap_fixtures import (
         build_eth_ipv4_tcp, build_pcap, build_pcapng,
     )
@@ -194,7 +232,6 @@ def test_slice_extraction_union_equals_whole_file(payloads, n_slices, png):
     ]
     suffix = ".pcapng" if png else ".pcap"
     build = build_pcapng if png else build_pcap
-    extract = extract_pcapng_slice if png else extract_classic_slice
     fd, path = tempfile.mkstemp(suffix=suffix)
     with os.fdopen(fd, "wb") as fh:
         fh.write(build(frames))
@@ -206,7 +243,7 @@ def test_slice_extraction_union_equals_whole_file(payloads, n_slices, png):
     got, offsets = [], []
     for j, (s, e) in enumerate(zip(bounds, bounds[1:])):
         out = path + f".slice{j}"
-        offs = extract(path, s, e, out)
+        offs = extract_slice(path, s, e, out)
         pkts = list(iter_packets(out))
         assert len(pkts) == len(offs)
         got.extend(pkts)

@@ -19,7 +19,8 @@ Resolution order for a path:
 The contract is deliberately minimal — `open(path)` returning a seekable
 binary file and `size(path)`/`exists(path)` — because that is ALL the
 split machinery needs: `byte_range_partitions` plans from size alone and
-`iter_packets` seeks/reads within one slice.
+the record core (`native.open_record_batches`) seeks/reads within one
+slice.
 """
 
 from __future__ import annotations

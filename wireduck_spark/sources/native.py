@@ -23,7 +23,8 @@ import os
 import struct
 from dataclasses import dataclass
 from datetime import datetime, timedelta
-from functools import lru_cache
+from functools import lru_cache, partial
+from itertools import repeat
 
 from wireduck_spark.sources.fs import filesystem_for
 
@@ -61,8 +62,8 @@ def read_global_header(buf: bytes) -> PcapInfo:
         elif magic_be == MAGIC_NS_LE:
             endian, div = ">", 1_000_000_000
         else:
-            raise ValueError(f"not a classic pcap file (magic {magic:#x}); "
-                             "pcapng is not supported by the native engine")
+            raise ValueError(f"not a classic pcap or pcapng file "
+                             f"(magic {magic:#x})")
     _, _, _, _, snaplen, linktype = struct.unpack(
         endian + "HHiIII", buf[4:GLOBAL_HEADER_LEN]
     )
@@ -122,7 +123,7 @@ def _caplen_cap(info: PcapInfo) -> int:
     boundaries when the capture's snaplen allowed them); the 1 MiB sane
     default applies only when snaplen is 0/unset. Captures whose snaplen
     exceeds `splittable_snaplen` never reach this cap — they fall back to
-    an unsplit read (see _iter_classic_records)."""
+    an unsplit read (see _slice_bounds)."""
     return info.snaplen if 0 < info.snaplen else _MAX_SANE_CAPLEN
 
 
@@ -2422,36 +2423,56 @@ def is_pcapng(path: str) -> bool:
         return fh.read(4) == PCAPNG_MAGIC
 
 
-def _iter_classic_raw_batches(fh, info: PcapInfo, size: int, start_byte,
-                              end_byte, batch_rows: int = 1024):
-    """LISTS of (record_offset, header_bytes, data_bytes) per up-to-
-    batch_rows records of a classic file, honoring byte-range slices
-    with resync — the chunked-read batched core under every classic
-    record consumer (r15, guide §1.2 step 2: one 4 MiB fh.read per
-    chunk instead of two syscalls per record, and one generator
-    resumption per batch instead of per record)."""
-    if not splittable_snaplen(info):
-        # snaplen beyond the sane resync cap: byte-range resync can't be
-        # trusted, so fall back to one unsplit read — the FIRST slice owns
-        # the whole file, every other slice owns nothing (exactly-once
-        # preserved without coordination; round-2 ADVICE fix).
+# The record core: both formats walk their framing in chunked reads (one
+# fh.read per 4 MiB instead of a seek and 2-5 reads per record, and one
+# generator resumption per batch instead of per record) and yield LISTS
+# of record spans, `(file_offset, verbatim_bytes, ...)`, holding up to
+# batch_rows packets. Every record consumer — open_record_batches,
+# iter_packets, extract_slice — reads through _open_slice.
+_CHUNK = 4 << 20
+
+
+def _slice_bounds(start_byte, end_byte, size: int, first: int,
+                  splittable: bool, resync):
+    """(off, end, unsplit): the records one slice owns, for both formats.
+
+    A record belongs to the slice iff its header STARTS in [off, end) —
+    even when its bytes extend past end (the next slice resyncs past
+    it). `first` is the offset of the file's first record and
+    `resync(start)` the first record boundary at or after a mid-file
+    start. `unsplit` is True for a whole-file read.
+
+    A capture whose snaplen defeats byte-range resync (not `splittable`)
+    reads as ONE partition: the FIRST slice owns the whole file and every
+    other slice owns nothing, so exactly-once holds without coordination
+    (round-2 ADVICE). The first slice is the one starting at
+    GLOBAL_HEADER_LEN, the planner's unique minimum start (ADVICE r12:
+    testing pcapng's first packet offset instead let slices starting
+    inside the SHB+IDB preamble ALSO own the file and duplicate rows)."""
+    if not splittable:
         if start_byte is not None and start_byte > GLOBAL_HEADER_LEN:
-            return
+            return size, size, False
         start_byte = end_byte = None
-    off = GLOBAL_HEADER_LEN
-    if start_byte is not None and start_byte > GLOBAL_HEADER_LEN:
-        off = resync_offset(fh, info, start_byte, size)
+    off = first
+    if start_byte is not None and start_byte > first:
+        off = resync(start_byte)
     end = end_byte if end_byte is not None else size
+    return off, end, start_byte is None
+
+
+def _classic_spans(fh, info: PcapInfo, off: int, end: int, size: int,
+                   batch_rows: int):
+    """LISTS of (record_offset, record_bytes) — the 16-byte header plus
+    the data, verbatim — for the classic records starting in [off, end)."""
     fh.seek(off)
     unpack_from = struct.Struct(info.endian + "IIII").unpack_from
-    chunk = 4 << 20
     buf = b""
     pos = 0
     out: list = []
     append = out.append
     while off < end:
         if pos + RECORD_HEADER_LEN > len(buf):
-            buf = buf[pos:] + fh.read(chunk)
+            buf = buf[pos:] + fh.read(_CHUNK)
             pos = 0
             if len(buf) < RECORD_HEADER_LEN:
                 break
@@ -2468,13 +2489,12 @@ def _iter_classic_raw_batches(fh, info: PcapInfo, size: int, start_byte,
             break
         rec_end = pos + RECORD_HEADER_LEN + incl
         if rec_end > len(buf):
-            buf = buf[pos:] + fh.read(max(chunk, rec_end - pos))
+            buf = buf[pos:] + fh.read(max(_CHUNK, rec_end - pos))
             pos = 0
             rec_end = RECORD_HEADER_LEN + incl
             if len(buf) < rec_end:
                 break
-        append((off, buf[pos:pos + RECORD_HEADER_LEN],
-                buf[pos + RECORD_HEADER_LEN:rec_end]))
+        append((off, buf[pos:rec_end]))
         pos = rec_end
         off += RECORD_HEADER_LEN + incl
         if len(out) >= batch_rows:
@@ -2485,93 +2505,29 @@ def _iter_classic_raw_batches(fh, info: PcapInfo, size: int, start_byte,
         yield out
 
 
-def _iter_classic_raw(fh, info: PcapInfo, size: int, start_byte, end_byte):
-    """(record_offset, header_bytes, data_bytes) per record of a classic
-    file, honoring byte-range slices with resync — the raw layer shared
-    by the dissecting iterator and the tshark-slice extractor (the latter
-    must copy record bytes verbatim, so it cannot consume parsed
-    timestamps)."""
-    for batch in _iter_classic_raw_batches(fh, info, size, start_byte,
-                                           end_byte):
-        yield from batch
-
-
-def _iter_classic_record_batches(fh, size: int, start_byte, end_byte,
-                                 batch_rows: int = 1024):
-    """COLUMNAR record batches — (offs, epochs, incls, origs, datas,
-    linktype) tuples of per-batch lists — the batched entry the
-    vectorized Arrow path consumes (r15: building five parallel lists
-    here is cheaper than 200k 6-tuples that batch_columns would
-    immediately re-gather into columns)."""
-    info = read_global_header(fh.read(GLOBAL_HEADER_LEN))
-    unpack = struct.Struct(info.endian + "IIII").unpack
-    ns = info.ts_divisor == 1_000_000_000
-    lt = info.linktype
-    for batch in _iter_classic_raw_batches(fh, info, size, start_byte,
-                                           end_byte, batch_rows):
-        offs = [r[0] for r in batch]
-        hdrs = [unpack(r[1]) for r in batch]
-        datas = [r[2] for r in batch]
-        # integer microseconds (no float round-trip: ns captures keep
-        # exact us truncation, and 2038+ second counts stay exact)
-        if ns:
-            epochs = [u[0] * 1_000_000 + u[1] // 1000 for u in hdrs]
-        else:
-            epochs = [u[0] * 1_000_000 + u[1] for u in hdrs]
-        yield (offs, epochs, [u[2] for u in hdrs], [u[3] for u in hdrs],
-               datas, lt)
-
-
-def _iter_classic_records(fh, size: int, start_byte, end_byte):
-    """(record_offset, epoch_us, incl, orig, data, linktype) per record of
-    a classic-libpcap file, honoring byte-range slices with resync."""
-    for offs, epochs, incls, origs, datas, lt in \
-            _iter_classic_record_batches(fh, size, start_byte, end_byte):
-        for i, off in enumerate(offs):
-            yield off, epochs[i], incls[i], origs[i], datas[i], lt
-
-
-def extract_classic_slice(path: str, start_byte, end_byte,
-                          out_path: str) -> list[int]:
-    """Materialize one byte-range slice of a classic capture as a
-    STANDALONE mini-capture: the original 24-byte global header (magic,
-    endianness, ts resolution, snaplen, linktype all preserved) plus the
-    slice's record bytes copied VERBATIM — so any record-stream consumer
-    (tshark above all) dissects the slice exactly as it would the whole
-    file. Ownership is the byte_range_partitions contract: a record
-    belongs to the slice iff its header starts in [resync(start), end).
-
-    Returns the original-file byte offset of each copied record, in
-    order: the split-read frame.number surrogate (same contract as
-    iter_packets on a slice), letting the caller rewrite the consumer's
-    slice-local ordinals into globally unique, partition-invariant ids.
-
-    This is the editcap-free way to lift the reference's one-file-one-
-    process tshark ceiling (wireduck_extension.cpp:126,180): the driver
-    plans fixed byte ranges from the file size alone, each executor
-    extracts its slice locally (through the fs seam — works on object
-    stores) and pipes a private tshark over it.
-    """
-    fs = filesystem_for(path)
-    size = fs.size(path)
-    offsets: list[int] = []
-    with fs.open(path) as fh:
-        head = fh.read(GLOBAL_HEADER_LEN)
-        info = read_global_header(head)
-        with open(out_path, "wb") as out:
-            out.write(head)
-            for off, hdr, data in _iter_classic_raw(fh, info, size,
-                                                    start_byte, end_byte):
-                out.write(hdr)
-                out.write(data)
-                offsets.append(off)
-    return offsets
+def _classic_columns(info: PcapInfo, batch: list) -> tuple:
+    """One classic span batch as the columnar record tuple."""
+    unpack_from = struct.Struct(info.endian + "IIII").unpack_from
+    hdrs = [unpack_from(rec) for _, rec in batch]
+    # integer microseconds (no float round-trip: ns captures keep exact
+    # us truncation, and 2038+ second counts stay exact)
+    if info.ts_divisor == 1_000_000_000:
+        epochs = [h[0] * 1_000_000 + h[1] // 1000 for h in hdrs]
+    else:
+        epochs = [h[0] * 1_000_000 + h[1] for h in hdrs]
+    return ([off for off, _ in batch], epochs, [h[2] for h in hdrs],
+            [h[3] for h in hdrs],
+            [rec[RECORD_HEADER_LEN:] for _, rec in batch], info.linktype)
 
 
 _SHB_TYPE = 0x0A0D0D0A
 _IDB_TYPE = 0x00000001
 _SPB_TYPE = 0x00000003
 _EPB_TYPE = 0x00000006
+# SHB byte-order magic 0x1A2B3C4D as a little-endian section stores it
+_BOM_LE = b"\x4d\x3c\x2b\x1a"
+_BLOCK_HEAD = {e: struct.Struct(e + "II").unpack_from for e in "<>"}
+_EPB_HEAD = {e: struct.Struct(e + "IIIII").unpack_from for e in "<>"}
 
 
 def _idb_tsresol(body: bytes, endian: str) -> int:
@@ -2675,6 +2631,123 @@ def _find_all(buf: bytes, marker: bytes):
         rel = buf.find(marker, rel + 1)
 
 
+def _pcapng_spans(fh, endian: str, off: int, end: int, size: int,
+                  unsplit: bool, batch_rows: int):
+    """LISTS of (block_offset, block_bytes, block_type, endian) — every
+    block starting in [off, end), verbatim, with up to batch_rows PACKET
+    blocks (EPB/SPB) per list. An SHB restarts its section: its byte-
+    order magic sets the endianness of every block after it.
+
+    Reads start at 64 KiB and double up to 4 MiB, so a walk that stops
+    at the head (the preamble of a split read) reads little."""
+    fh.seek(off)
+    chunk = 1 << 16
+    head = _BLOCK_HEAD[endian]
+    buf = b""
+    pos = 0
+    out: list = []
+    append = out.append
+    packets = 0
+    while off < end and off + 12 <= size:
+        if pos + 12 > len(buf):
+            buf = buf[pos:] + fh.read(chunk)
+            pos = 0
+            chunk = min(chunk * 2, _CHUNK)
+            if len(buf) < 12:
+                break
+        btype, blen = head(buf, pos)
+        if btype == _SHB_TYPE:
+            endian = "<" if buf[pos + 8:pos + 12] == _BOM_LE else ">"
+            head = _BLOCK_HEAD[endian]
+            blen = head(buf, pos)[1]
+        if blen < 12 or off + blen > size:
+            break
+        if blen > _MAX_SANE_ORIGLEN:
+            # A >64 MiB blen must not become one near-file-sized read
+            # (r12 review) — but on an UNSPLIT read, breaking here would
+            # silently truncate everything after the first oversized
+            # block (ADVICE r12). If the block's trailing length field
+            # confirms blen it is a real (if giant) block: skip it and
+            # keep reading. Split reads stop — the slice that owns the
+            # next block resyncs past this one.
+            if not unsplit:
+                break
+            fh.seek(off + blen - 4)
+            tail = fh.read(4)
+            if len(tail) != 4 or struct.unpack(endian + "I", tail)[0] != blen:
+                break
+            off += blen
+            fh.seek(off)
+            buf = b""
+            pos = 0
+            continue
+        blk_end = pos + blen
+        if blk_end > len(buf):
+            buf = buf[pos:] + fh.read(max(chunk, blen))
+            pos = 0
+            blk_end = blen
+            if len(buf) < blen:
+                break
+        append((off, buf[pos:blk_end], btype, endian))
+        pos = blk_end
+        off += blen
+        if btype == _EPB_TYPE or btype == _SPB_TYPE:
+            packets += 1
+            if packets >= batch_rows:
+                yield out
+                out = []
+                append = out.append
+                packets = 0
+    if out:
+        yield out
+
+
+def _pcapng_columns(interfaces: list, batch: list) -> tuple:
+    """One pcapng span batch as the columnar record tuple. SHB and IDB
+    blocks update `interfaces` — (linktype, ticks per second) per
+    interface id of the current section — in place; an EPB naming an
+    unknown interface reads as Ethernet in microseconds, and an SPB
+    (no timestamp) as interface 0 at epoch 0."""
+    offs: list = []
+    epochs: list = []
+    incls: list = []
+    origs: list = []
+    datas: list = []
+    lts: list = []
+    for off, blk, btype, endian in batch:
+        if btype == _EPB_TYPE:
+            if len(blk) < 32:
+                continue
+            if_id, ts_hi, ts_lo, incl, orig = _EPB_HEAD[endian](blk, 8)
+            linktype, ticks = (interfaces[if_id] if if_id < len(interfaces)
+                               else (1, 1_000_000))
+            epochs.append(((ts_hi << 32) | ts_lo) * 1_000_000 // ticks)
+            data = blk[28:min(28 + incl, len(blk) - 4)]
+        elif btype == _SPB_TYPE:
+            if len(blk) < 16:
+                continue
+            orig = struct.unpack_from(endian + "I", blk, 8)[0]
+            incl = min(orig, len(blk) - 16)
+            data = blk[12:12 + incl]
+            linktype = interfaces[0][0] if interfaces else 1
+            epochs.append(0)
+        else:
+            if btype == _IDB_TYPE and len(blk) >= 20:
+                body = blk[8:-4]
+                interfaces.append((struct.unpack_from(endian + "H", body)[0],
+                                   _idb_tsresol(body, endian)))
+            elif btype == _SHB_TYPE:
+                interfaces.clear()  # section restart
+            continue
+        offs.append(off)
+        incls.append(incl)
+        origs.append(orig)
+        datas.append(data)
+        lts.append(linktype)
+    lt = lts[0] if lts and lts.count(lts[0]) == len(lts) else lts
+    return offs, epochs, incls, origs, datas, lt
+
+
 def _pcapng_preamble(fh, size: int):
     """(endian, interfaces, first_packet_off, splittable): walk the head of
     the file — SHB + IDBs (+NRBs etc.) — up to the first packet block.
@@ -2682,7 +2755,7 @@ def _pcapng_preamble(fh, size: int):
     a byte-range executor reads this O(KB) preamble plus its own slice.
     (An IDB added mid-file for a hot-plugged interface would be missed by
     slices after it — documented limitation; such captures should disable
-    splitting.)
+    splitting. The same holds for a mid-file SHB section.)
 
     ``splittable`` is the pcapng twin of classic's
     :func:`splittable_snaplen` (r12 review: the pcapng path had NO
@@ -2694,275 +2767,147 @@ def _pcapng_preamble(fh, size: int):
     resync untrustworthy, so such captures read as ONE partition.
     snaplen 0 (unset/unlimited) stays splittable under the sanity cap —
     the same documented residual as classic's snaplen-0 rule."""
-    off = 0
-    endian = "<"
-    interfaces: list[tuple[int, int]] = []
-    splittable = True
-    while off + 12 <= size:
-        fh.seek(off)
-        head = fh.read(8)
-        if len(head) < 8:
-            break
-        if struct.unpack("<I", head[:4])[0] == _SHB_TYPE:
-            bom = fh.read(4)
-            endian = "<" if bom == b"\x4d\x3c\x2b\x1a" else ">"
-            interfaces = []
-        btype, blen = struct.unpack(endian + "II", head)
-        if blen < 12 or off + blen > size:
-            break
-        if btype in (_EPB_TYPE, _SPB_TYPE):
-            return endian, interfaces, off, splittable
-        if btype == _IDB_TYPE:
-            body = fh.read(min(blen - 12, 4096))
-            if len(body) >= 8:
-                linktype = struct.unpack(endian + "H", body[:2])[0]
-                snaplen = struct.unpack(endian + "I", body[4:8])[0]
-                # 128 B of EPB framing/options headroom over the snaplen
-                if snaplen + 128 > _MAX_SANE_BLOCK and snaplen != 0:
-                    splittable = False
-                interfaces.append((linktype, _idb_tsresol(body, endian)))
-        off += blen
-    return endian, interfaces, size, splittable
+    # one batch: the head blocks, ending at the first packet block if any
+    head = next(_pcapng_spans(fh, "<", 0, size, size, True, 1), [])
+    first, endian = size, "<"
+    if head:
+        endian = head[-1][3]
+        if head[-1][2] in (_EPB_TYPE, _SPB_TYPE):
+            first = head.pop()[0]
+    interfaces: list = []
+    _pcapng_columns(interfaces, head)
+    snaplens = [struct.unpack_from(e + "I", blk, 12)[0]
+                for _, blk, t, e in head
+                if t == _IDB_TYPE and len(blk) >= 20]
+    # 128 B of EPB framing/options headroom over the snaplen
+    splittable = all(s == 0 or s + 128 <= _MAX_SANE_BLOCK for s in snaplens)
+    return endian, interfaces, first, splittable
 
 
-def extract_pcapng_slice(path: str, start_byte, end_byte,
-                         out_path: str) -> list[int]:
-    """pcapng twin of :func:`extract_classic_slice`: materialize one
-    byte-range slice as a standalone mini-capture — the head preamble
-    (SHB + IDBs + any other pre-packet blocks, copied verbatim so
-    endianness, interface link types, and ts resolutions are preserved)
-    followed by every block whose header starts in [resync(start), end),
-    also verbatim (EPB/SPB and any interleaved ISB/NRB/custom blocks;
-    a mid-slice SHB restarts its section in the temp file exactly as in
-    the source).
-
-    Returns the original-file byte offsets of the PACKET blocks only
-    (EPB/SPB — the blocks tshark numbers as frames), in order, for the
-    slice-local frame.number -> byte-offset rewrite.
-
-    Shares _pcapng_preamble's documented limitation: an IDB added
-    mid-file (hot-plugged interface) lands only in slices at-or-after
-    it while earlier-slice EPBs never reference it; captures like that
-    should disable splitting.
-    """
-    fs = filesystem_for(path)
-    size = fs.size(path)
-    offsets: list[int] = []
-    with fs.open(path) as fh:
-        endian, _, first_pkt, splittable = _pcapng_preamble(fh, size)
-        if not splittable:
-            # oversized-snaplen fallback (see _pcapng_preamble): first
-            # slice owns the whole file, every other slice owns nothing.
-            # Ownership = start_byte <= GLOBAL_HEADER_LEN, the planner's
-            # unique minimum first-slice start (same test as
-            # _iter_pcapng_records / _iter_classic_raw — ADVICE r12:
-            # first_pkt let preamble-straddling slices double-own).
-            if start_byte is not None and start_byte > GLOBAL_HEADER_LEN:
-                open(out_path, "wb").close()
-                return offsets
-            start_byte = end_byte = None
-        fh.seek(0)
-        preamble = fh.read(first_pkt)
-        off = first_pkt
-        if start_byte is not None and start_byte > first_pkt:
-            off = pcapng_resync_offset(fh, endian, start_byte, size)
-        end = end_byte if end_byte is not None else size
-        with open(out_path, "wb") as out:
-            out.write(preamble)
-            while off < end and off + 12 <= size:
-                fh.seek(off)
-                head = fh.read(8)
-                if len(head) < 8:
-                    break
-                if struct.unpack("<I", head[:4])[0] == _SHB_TYPE:
-                    bom = fh.read(4)
-                    endian = "<" if bom == b"\x4d\x3c\x2b\x1a" else ">"
-                btype, blen = struct.unpack(endian + "II", head)
-                if blen < 12 or off + blen > size:
-                    break
-                if blen > _MAX_SANE_ORIGLEN:
-                    # same skip-vs-break rule as _iter_pcapng_records
-                    # (ADVICE r12): unsplit reads seek past a giant
-                    # block whose trailing length confirms blen; split
-                    # slices break and let the next slice resync.
-                    if start_byte is None:
-                        fh.seek(off + blen - 4)
-                        tail = fh.read(4)
-                        if len(tail) == 4 and \
-                                struct.unpack(endian + "I", tail)[0] == blen:
-                            off += blen
-                            continue
-                    break
-                fh.seek(off)
-                out.write(fh.read(blen))
-                if btype in (_EPB_TYPE, _SPB_TYPE):
-                    offsets.append(off)
-                off += blen
-    return offsets
-
-
-def _iter_pcapng_records(fh, size: int, start_byte=None, end_byte=None):
-    """(block_offset, epoch_us, incl, orig, data, linktype) per packet
-    block of a pcapng file: SHB (endianness per section) + IDB (linktype,
-    ts resolution per interface) + EPB/SPB packet blocks. The reference
-    reads pcapng only via tshark (cpp:109 just hands the path over); this
-    makes the tshark-free engine accept the Wireshark-default format.
-
-    start_byte/end_byte select a byte-range slice: the executor reads the
-    head preamble (endian + interface table), resyncs to the first EPB
-    whose block STARTS inside [start, end), and stops at end — the same
-    owned-by-exactly-one-slice contract as the classic reader, including
-    classic's oversized-snaplen unsplit fallback (first slice owns the
-    whole file; see _pcapng_preamble)."""
-    endian, interfaces, first_pkt, splittable = _pcapng_preamble(fh, size)
-    if not splittable:
-        # Ownership test mirrors _iter_classic_raw: exactly ONE planned
-        # slice starts at GLOBAL_HEADER_LEN (the planner's unique
-        # minimum). Testing against first_pkt instead (SHB+IDB preamble,
-        # ~48+ bytes) let slices 2..k whose start fell inside the
-        # preamble ALSO own the whole file and duplicate every row when
-        # per-slice spans are tiny (ADVICE r12).
-        if start_byte is not None and start_byte > GLOBAL_HEADER_LEN:
-            return
-        start_byte = end_byte = None
-    off = first_pkt
-    if start_byte is not None and start_byte > first_pkt:
-        off = pcapng_resync_offset(fh, endian, start_byte, size)
-    # a block is owned by this slice iff it STARTS in [off, end) — even
-    # when its header/body extend past end (the next slice resyncs past it)
-    end = end_byte if end_byte is not None else size
-    while off < end and off + 12 <= size:
-        fh.seek(off)
-        head = fh.read(8)
-        if len(head) < 8:
-            break
-        if struct.unpack("<I", head[:4])[0] == _SHB_TYPE:
-            bom = fh.read(4)
-            endian = "<" if bom == b"\x4d\x3c\x2b\x1a" else ">"
-            interfaces = []  # section restart
-            fh.seek(off)
-            head = fh.read(8)
-        btype, blen = struct.unpack(endian + "II", head)
-        if blen < 12 or off + blen > size:
-            break
-        if blen > _MAX_SANE_ORIGLEN:
-            # A >64 MiB blen must not become one near-file-sized fh.read
-            # allocation (r12 review) — but on an UNSPLIT read breaking
-            # here silently truncated everything after the first
-            # oversized block (ADVICE r12). If the block's trailing
-            # length field confirms blen, it is a real (if giant) block:
-            # seek past it and keep reading. Split reads still break —
-            # the slice that owns the next block resyncs past this one.
-            if start_byte is None:
-                fh.seek(off + blen - 4)
-                tail = fh.read(4)
-                if len(tail) == 4 and \
-                        struct.unpack(endian + "I", tail)[0] == blen:
-                    off += blen
-                    continue
-            break
-        body = fh.read(blen - 12)[: blen - 12]
-        if btype == _IDB_TYPE and len(body) >= 8:
-            linktype = struct.unpack(endian + "H", body[:2])[0]
-            interfaces.append((linktype, _idb_tsresol(body, endian)))
-        elif btype == _EPB_TYPE and len(body) >= 20:
-            if_id, ts_hi, ts_lo, incl, orig = struct.unpack(
-                endian + "IIIII", body[:20]
-            )
-            data = body[20:20 + incl]
-            linktype, ticks = (
-                interfaces[if_id] if if_id < len(interfaces) else (1, 1_000_000)
-            )
-            ts = (ts_hi << 32) | ts_lo
-            epoch_us = ts * 1_000_000 // ticks
-            yield off, epoch_us, incl, orig, data, linktype
-        elif btype == _SPB_TYPE and len(body) >= 4:
-            orig = struct.unpack(endian + "I", body[:4])[0]
-            data = body[4:]
-            linktype = interfaces[0][0] if interfaces else 1
-            incl = min(orig, len(data))
-            yield off, 0, incl, orig, data[:incl], linktype
-        off += blen
-
-
-def open_records(path: str, start_byte: int | None = None,
-                 end_byte: int | None = None, size: int | None = None):
-    """(records iterator, split flag) for a capture slice — the shared
-    record walk under iter_packets and the r15 vectorized batch path
-    (native_vec). Yields (off, epoch_us, incl, orig, data, linktype)
-    tuples; `split` tells the consumer whether frame.number is the byte
-    offset (sliced read) or the 1-based ordinal (whole-file read) —
-    the exact rule iter_packets documents below."""
-    fs = filesystem_for(path)
-    if size is None:
-        size = fs.size(path)
-    fh = fs.open(path)
-    pcapng = fh.read(4) == PCAPNG_MAGIC
+def _open_slice(fh, size: int, start_byte, end_byte, batch_rows: int):
+    """(first_record_off, span batches, columns) for the slice of the
+    capture open on `fh`, classic pcap or pcapng (sniffed from the first
+    4 bytes): `columns(batch)` decodes one span batch into the columnar
+    record tuple. The span walk starts at its first read, so the caller
+    may read the file head before that."""
+    if fh.read(4) == PCAPNG_MAGIC:
+        endian, interfaces, first, splittable = _pcapng_preamble(fh, size)
+        off, end, unsplit = _slice_bounds(
+            start_byte, end_byte, size, first, splittable,
+            lambda s: pcapng_resync_offset(fh, endian, s, size))
+        return (first,
+                _pcapng_spans(fh, endian, off, end, size, unsplit,
+                              batch_rows),
+                partial(_pcapng_columns, interfaces))
     fh.seek(0)
-    if pcapng:
-        records = _iter_pcapng_records(fh, size, start_byte, end_byte)
-    else:
-        records = _iter_classic_records(fh, size, start_byte, end_byte)
-    split = start_byte is not None and (
-        start_byte > GLOBAL_HEADER_LEN
-        or (end_byte is not None and end_byte < size)
-    )
-
-    def gen():
-        try:
-            yield from records
-        finally:
-            fh.close()
-
-    return gen(), split
+    info = read_global_header(fh.read(GLOBAL_HEADER_LEN))
+    off, end, _ = _slice_bounds(
+        start_byte, end_byte, size, GLOBAL_HEADER_LEN,
+        splittable_snaplen(info), lambda s: resync_offset(fh, info, s, size))
+    return (GLOBAL_HEADER_LEN,
+            _classic_spans(fh, info, off, end, size, batch_rows),
+            partial(_classic_columns, info))
 
 
 def open_record_batches(path: str, start_byte: int | None = None,
                         end_byte: int | None = None,
                         size: int | None = None,
                         batch_rows: int = 4096):
-    """(iterator of record-tuple LISTS, split flag) — the batched twin
-    of open_records for the vectorized Arrow path (classic captures
-    walk the batched core directly; pcapng batches its per-record
-    iterator)."""
+    """(iterator of COLUMNAR record batches, split flag) for one capture
+    slice — the record walk under every native consumer. A batch is
+    (offs, epochs_us, incls, origs, datas, linktype): parallel lists of
+    up to batch_rows packets; linktype is one int when the whole batch
+    shares it and a per-packet list when it varies.
+
+    `split` tells the consumer whether frame.number is the record's byte
+    offset (sliced read) or the 1-based ordinal (whole-file read) — the
+    rule iter_packets documents. It is one rule for BOTH formats (r12
+    review: pcapng used `start_byte > 0`, so the same single-slice plan —
+    byte_range_partitions always starts at GLOBAL_HEADER_LEN — produced
+    ordinals on classic but byte offsets on pcapng). GLOBAL_HEADER_LEN is
+    the planner's minimum first-slice start; any true split's later
+    slices start far beyond it."""
     fs = filesystem_for(path)
     if size is None:
         size = fs.size(path)
-    fh = fs.open(path)
-    pcapng = fh.read(4) == PCAPNG_MAGIC
-    fh.seek(0)
     split = start_byte is not None and (
         start_byte > GLOBAL_HEADER_LEN
         or (end_byte is not None and end_byte < size)
     )
 
-    def _columnar(rows: list):
-        lts = [r[5] for r in rows]
-        lt = lts[0] if len(set(lts)) == 1 else lts
-        return ([r[0] for r in rows], [r[1] for r in rows],
-                [r[2] for r in rows], [r[3] for r in rows],
-                [r[4] for r in rows], lt)
-
     def gen():
-        try:
-            if pcapng:
-                records = _iter_pcapng_records(fh, size, start_byte,
-                                               end_byte)
-                out: list = []
-                for rec in records:
-                    out.append(rec)
-                    if len(out) >= batch_rows:
-                        yield _columnar(out)
-                        out = []
-                if out:
-                    yield _columnar(out)
-            else:
-                yield from _iter_classic_record_batches(
-                    fh, size, start_byte, end_byte, batch_rows)
-        finally:
-            fh.close()
+        with fs.open(path) as fh:
+            _, spans, columns = _open_slice(fh, size, start_byte, end_byte,
+                                            batch_rows)
+            for batch in spans:
+                recs = columns(batch)
+                if recs[0]:
+                    yield recs
 
     return gen(), split
+
+
+def extract_slice(path: str, start_byte, end_byte,
+                  out_path: str) -> list[int]:
+    """Materialize one byte-range slice of a capture (classic pcap or
+    pcapng) as a STANDALONE mini-capture: the file's preamble — classic's
+    24-byte global header, or pcapng's SHB + IDBs + any other pre-packet
+    blocks — then every record or block the slice owns, all copied
+    VERBATIM, so endianness, ts resolution, snaplen and link types are
+    preserved and any record-stream consumer (tshark above all) dissects
+    the slice exactly as it would the whole file. Ownership is the
+    byte_range_partitions contract shared with iter_packets; interleaved
+    ISB/NRB/custom pcapng blocks are copied too, and a mid-slice SHB
+    restarts its section in the temp file exactly as in the source.
+
+    Returns the original-file byte offset of each copied PACKET record,
+    in order: the split-read frame.number surrogate (same contract as
+    iter_packets on a slice), letting the caller rewrite the consumer's
+    slice-local ordinals into globally unique, partition-invariant ids.
+
+    This is the editcap-free way to lift the reference's one-file-one-
+    process tshark ceiling (wireduck_extension.cpp:126,180): the driver
+    plans fixed byte ranges from the file size alone, each executor
+    extracts its slice locally (through the fs seam — works on object
+    stores) and pipes a private tshark over it. pcapng slices share
+    _pcapng_preamble's documented limitation on mid-file IDBs.
+    """
+    fs = filesystem_for(path)
+    size = fs.size(path)
+    offsets: list[int] = []
+    with fs.open(path) as fh, open(out_path, "wb") as out:
+        first, spans, columns = _open_slice(fh, size, start_byte, end_byte,
+                                            4096)
+        fh.seek(0)
+        out.write(fh.read(first))
+        for batch in spans:
+            out.write(b"".join(span[1] for span in batch))
+            offsets.extend(columns(batch)[0])
+    return offsets
+
+
+def _packet_fields(number: int, epoch_us: int, incl: int, orig: int,
+                   data: bytes, linktype: int, include_raw: bool) -> dict:
+    """One packet's {filter_name: value} row — frame fields (time as
+    epoch microseconds), the dissection, and the tcp.stream/udp.stream
+    flow id — shared by iter_packets and native_vec's fallback rows."""
+    fields: dict = {
+        "frame.number": number,
+        "frame.time_epoch": epoch_us,
+        "frame.len": orig,
+        "frame.cap_len": incl,
+    }
+    if include_raw:
+        fields["frame.raw"] = data.hex()
+    dissect_packet(data, linktype, fields)
+    l4 = ("tcp" if "tcp.srcport" in fields
+          else "udp" if "udp.srcport" in fields else None)
+    if l4 is not None:
+        src = fields.get("ip.src") or fields.get("ipv6.src")
+        dst = fields.get("ip.dst") or fields.get("ipv6.dst")
+        fields[l4 + ".stream"] = stream_id(
+            src, fields[l4 + ".srcport"], dst, fields[l4 + ".dstport"])
+    return fields
 
 
 def iter_packets(
@@ -3000,57 +2945,24 @@ def iter_packets(
     r12 review: deriving it live from the filesystem let a record whose
     bytes extended past then-EOF be skipped on the original run yet
     yielded on a replay after the file grew, and flipped the
-    split-detection comparison below. None (the default) reads the live
-    size — correct for one-shot batch reads of a quiescent file.
+    split-detection rule. None (the default) reads the live size —
+    correct for one-shot batch reads of a quiescent file.
 
     All IO goes through the `fs` seam, so `path` may be local, memory://
     (tests), or any fsspec/pyarrow scheme (s3://, hdfs://, ...) — the
     byte-range split contract is identical on all of them.
     """
-    fs = filesystem_for(path)
-    if size is None:
-        size = fs.size(path)
-    with fs.open(path) as fh:
-        pcapng = fh.read(4) == PCAPNG_MAGIC
-        fh.seek(0)
-        if pcapng:
-            records = _iter_pcapng_records(fh, size, start_byte, end_byte)
-        else:
-            records = _iter_classic_records(fh, size, start_byte, end_byte)
-        # One split rule for BOTH formats (r12 review: pcapng used
-        # `start_byte > 0`, so the same single-slice plan —
-        # byte_range_partitions always starts at GLOBAL_HEADER_LEN —
-        # produced ordinal frame.numbers on classic but byte offsets on
-        # pcapng). GLOBAL_HEADER_LEN is the planner's minimum first-slice
-        # start; any true split's later slices start far beyond it.
-        split = start_byte is not None and (
-            start_byte > GLOBAL_HEADER_LEN
-            or (end_byte is not None and end_byte < size)
-        )
-        frame_no = 1
-        for off, epoch_us, incl, orig, data, linktype in records:
-            fields: dict = {
-                "frame.number": off if split else frame_no,
-                "frame.time_epoch": epoch_us if raw_ts else (
-                    _EPOCH0 + timedelta(microseconds=epoch_us)
-                ),
-                "frame.len": orig,
-                "frame.cap_len": incl,
-            }
-            if include_raw:
-                fields["frame.raw"] = data.hex()
-            dissect_packet(data, linktype, fields)
-            if "tcp.srcport" in fields:
-                src = fields.get("ip.src") or fields.get("ipv6.src")
-                dst = fields.get("ip.dst") or fields.get("ipv6.dst")
-                fields["tcp.stream"] = stream_id(
-                    src, fields["tcp.srcport"], dst, fields["tcp.dstport"]
-                )
-            elif "udp.srcport" in fields:
-                src = fields.get("ip.src") or fields.get("ipv6.src")
-                dst = fields.get("ip.dst") or fields.get("ipv6.dst")
-                fields["udp.stream"] = stream_id(
-                    src, fields["udp.srcport"], dst, fields["udp.dstport"]
-                )
+    batches, split = open_record_batches(path, start_byte, end_byte,
+                                         size=size)
+    frame_no = 1
+    for offs, epochs, incls, origs, datas, lt in batches:
+        lts = repeat(lt) if isinstance(lt, int) else lt
+        for off, epoch_us, incl, orig, data, linktype in zip(
+                offs, epochs, incls, origs, datas, lts):
+            fields = _packet_fields(off if split else frame_no, epoch_us,
+                                    incl, orig, data, linktype, include_raw)
+            if not raw_ts:
+                fields["frame.time_epoch"] = (
+                    _EPOCH0 + timedelta(microseconds=epoch_us))
             yield fields
             frame_no += 1

@@ -1,26 +1,28 @@
 """Vectorized (columnar) batch dissector for the native pcap engine.
 
 r15 optimization (guide §4.2 "do the heavy lifting in native code"):
-the per-packet dict path (native.iter_packets -> dict -> per-column
-appends) spends most of its time building and re-reading ~20-field
-Python dicts per packet — the r14 profile put ~70% of the 200k-packet
-throughput capture's wall in dict stores, dict.get column assembly and
-per-field Python arithmetic, not in the L7 probes. This module parses
-the fixed L2/L3/L4 headers for a whole record batch at once with NumPy
-gathers over one concatenated byte buffer and emits pyarrow-ready
-columns directly; only genuinely row-wise work stays per packet:
+the per-packet dict path (one native._packet_fields dict per packet
+-> per-column appends) spends most of its time building and re-reading
+~20-field Python dicts per packet — the r14 profile put ~70% of the
+200k-packet throughput capture's wall in dict stores, dict.get column
+assembly and per-field Python arithmetic, not in the L7 probes. This
+module parses the fixed L2/L3/L4 headers for a whole record batch at
+once with NumPy gathers over one concatenated byte buffer and emits
+pyarrow-ready columns directly; only genuinely row-wise work stays per
+packet:
 
 - TCP payload rows: payload hex + the L7 probe chain (native._tcp_l7 —
   the exact chain _dissect_l4 runs) + the info string,
 - TCP rows with options (data_off > 20): native._tcp_options,
 - flow ids: cached per 4-tuple (native.stream_id on cache miss),
-- everything off the proven fast path (VLAN, IPv6, ARP, non-TCP/UDP IP
-  protocols, UDP with payload — whose probe chain can decapsulate
-  VXLAN/GTP and rewrite arbitrary columns, other linktypes): the row
-  falls back to native.dissect_packet and overwrites its cells, so the
-  output is bit-identical to the dict path BY CONSTRUCTION for every
-  row class (pinned by tests/test_native_vec.py's full differential
-  over every fixture capture).
+- UDP payload rows: the shared probe chain (native._udp_payload_chain),
+- everything off the proven fast path (VLAN, IPv6, ARP, the IP
+  protocols _dissect_l4 handles beyond TCP/UDP, UDP on a VXLAN/GTP
+  decap port — whose decapsulation rewrites other layers' columns):
+  the row falls back to native._packet_fields and overwrites its
+  cells, so the output is bit-identical to the dict path BY
+  CONSTRUCTION for every row class (pinned by tests/test_native_vec.py's
+  full differential over every synthetic capture in both framings).
 
 The fast path intentionally covers exactly the traffic that dominates
 big captures (plain Ethernet II / IPv4 / TCP, and header-only UDP);
@@ -33,23 +35,21 @@ import struct
 
 import numpy as np
 
-from wireduck_spark.sources import native
 from wireduck_spark.sources.native import (
     _TCP_FLAG_STR,
     _ipv4,
+    _packet_fields,
     _tcp_l7,
     _tcp_options,
     _udp_payload_chain,
-    dissect_packet,
     stream_id,
 )
 
-# UDP rows whose probe chain may rewrite non-UDP columns (VXLAN decap
-# rewrites ip.*/tcp.*; GTP decap extends the protocol chain) — these
-# ports force the full-row fallback even though the generic UDP-payload
-# rule already routes every payload-carrying UDP row there. Kept
-# explicit as documentation of WHY payload rows cannot ride the fast
-# path.
+# UDP decap ports (VXLAN 4789, GTP-U 2152): a payload row with either
+# port on one of them takes the full-row fallback, because the decap
+# branches of the probe chain rewrite other layers' columns (VXLAN
+# rewrites ip.*/tcp.*, GTP extends the protocol chain). Every other UDP
+# payload row stays on the fast path and runs _udp_payload_chain.
 _UDP_REWRITE_PORTS = (4789, 2152)
 
 # IPv4 protocol numbers _dissect_l4 handles beyond TCP/UDP — rows with
@@ -86,8 +86,9 @@ def batch_columns(recs: tuple, names: list[str], split: bool,
     """Dissect one COLUMNAR record batch into per-name column values.
 
     ``recs``: (offs, epochs, incls, origs, datas, linktype) — parallel
-    per-batch lists (linktype is a scalar when uniform) as yielded by
-    native.open_record_batches. Returns
+    per-batch lists (linktype is an int when the whole batch shares it,
+    else a per-packet list) as yielded by native.open_record_batches,
+    for classic pcap and pcapng alike. Returns
     {name: list | (np.ndarray, null_mask np.ndarray)} for every
     requested name — pyarrow-ready.
     """
@@ -170,11 +171,8 @@ def batch_columns(recs: tuple, names: list[str], split: bool,
     # a UDP payload slice is non-empty iff the length field says there
     # is payload AND the capture actually holds bytes past the header
     udp_has_pay = udp_m & (ulen > 8) & (lens > l4off + 8)
-    # rows that could hit the VXLAN/GTP decap branches (which rewrite
-    # other layers' fields) take the full fallback; every other
-    # payload row runs the shared _udp_payload_chain per packet
-    udp_fb = udp_has_pay & (
-        (udport == 4789) | (usport == 2152) | (udport == 2152))
+    udp_fb = udp_has_pay & (np.isin(usport, _UDP_REWRITE_PORTS)
+                            | np.isin(udport, _UDP_REWRITE_PORTS))
     udp_fast = udp_m & ~udp_fb
 
     # ---- full-row fallback set --------------------------------------------
@@ -359,28 +357,9 @@ def batch_columns(recs: tuple, names: list[str], split: bool,
         fnl = frame_no.tolist()
         ltl = lt.tolist()
         for i in fb_rows.tolist():
-            data = datas[i]
-            fields: dict = {
-                "frame.number": fnl[i],
-                "frame.time_epoch": epochs_l[i],
-                "frame.len": origs_l[i],
-                "frame.cap_len": incls_l[i],
-            }
-            if include_raw:
-                fields["frame.raw"] = data.hex()
-            dissect_packet(data, ltl[i], fields)
-            if "tcp.srcport" in fields:
-                fsrc = fields.get("ip.src") or fields.get("ipv6.src")
-                fdst = fields.get("ip.dst") or fields.get("ipv6.dst")
-                fields["tcp.stream"] = stream_id(
-                    fsrc, fields["tcp.srcport"], fdst,
-                    fields["tcp.dstport"])
-            elif "udp.srcport" in fields:
-                fsrc = fields.get("ip.src") or fields.get("ipv6.src")
-                fdst = fields.get("ip.dst") or fields.get("ipv6.dst")
-                fields["udp.stream"] = stream_id(
-                    fsrc, fields["udp.srcport"], fdst,
-                    fields["udp.dstport"])
+            fields = _packet_fields(fnl[i], epochs_l[i], incls_l[i],
+                                    origs_l[i], datas[i], ltl[i],
+                                    include_raw)
             protocols[i] = fields.get("frame.protocols")
             get = fields.get
             for nm in names:
@@ -409,7 +388,3 @@ def batch_columns(recs: tuple, names: list[str], split: bool,
         else:
             out[nm] = lists[nm]
     return out
-
-
-def _have_numpy() -> bool:  # seam for tests
-    return True

@@ -118,7 +118,8 @@ def native_arrow_batches(
     per-packet Python only for payload probes and off-fast-path rows),
     replacing the per-packet dict build + per-column dict.get appends
     that dominated the old path's profile. Output is bit-identical to
-    iter_packets by construction (fallback rows literally run it);
+    iter_packets by construction (fallback rows run its per-packet field
+    builder, native._packet_fields);
     pinned by tests/test_native_vec.py's full differential."""
     import pyarrow as pa
 
@@ -169,7 +170,7 @@ class PcapPartition(InputPartition):
     start_byte: int | None = None  # None -> whole file
     end_byte: int | None = None
     # plan-frozen whole-file size (None -> executor reads the live size);
-    # threads to iter_packets(size=) so every slice of one plan sees the
+    # threads to open_record_batches(size=) so every slice of one plan sees the
     # SAME size even if the capture grows between planning and execution.
     file_size: int | None = None
 
@@ -429,11 +430,10 @@ class PcapReader(DataSourceReader):
         for path in self.paths:
             fs = filesystem_for(path)
             # tshark can split too (round-3 VERDICT #3): executors extract
-            # their byte-range slice into a standalone temp capture (native
-            # resync machinery; extract_classic_slice / extract_pcapng_slice
-            # by format) and pipe a private tshark over it — lifting the
-            # reference's one-file-one-process ceiling (cpp:126,180) on the
-            # 3000-protocol path.
+            # their byte-range slice into a standalone temp capture
+            # (native.extract_slice, either format) and pipe a private
+            # tshark over it — lifting the reference's one-file-one-process
+            # ceiling (cpp:126,180) on the 3000-protocol path.
             splittable = self.engine in ("native", "tshark")
             if (
                 splittable
@@ -537,13 +537,8 @@ class PcapReader(DataSourceReader):
             fn_idx = names.index("frame.number")
         except ValueError:
             fn_idx = None
-        extract = (
-            native.extract_pcapng_slice
-            if native.is_pcapng(partition.path)
-            else native.extract_classic_slice
-        )
         with tempfile.NamedTemporaryFile(suffix=".pcap") as tmp:
-            offsets = extract(
+            offsets = native.extract_slice(
                 partition.path, partition.start_byte, partition.end_byte,
                 tmp.name,
             )

@@ -60,11 +60,11 @@ class PcapStreamPartition(InputPartition):
     start_byte: int
     end_byte: int
     # size-at-listing of the WHOLE file (not this slice): threads through
-    # to iter_packets(size=) so a batch replays identically even if the
-    # capture grew after the offset was recorded — reading the live size
-    # executor-side let a record that straddled then-EOF appear only on
-    # the replay, and flipped unsplit reads into offset-numbered ones
-    # (r12 review).
+    # to native.open_record_batches(size=) so a batch replays identically
+    # even if the capture grew after the offset was recorded — reading
+    # the live size executor-side let a record that straddled then-EOF
+    # appear only on the replay, and flipped unsplit reads into
+    # offset-numbered ones (r12 review).
     file_size: int
 
 
