@@ -18,13 +18,17 @@ import struct
 import pytest
 
 from tests.pcap_fixtures import (
+    build_eth_arp,
+    build_eth_ipv4_icmp,
     build_eth_ipv4_tcp,
     build_eth_ipv4_udp,
+    build_eth_ipv6_udp,
+    build_pcap,
     build_pcapng,
     dns_query_payload,
 )
 from tests.test_native import FIXTURE
-from wireduck_spark.sources import native
+from wireduck_spark.sources import native, native_vec
 from wireduck_spark.sources.pcap import (
     ARROW_BATCH_ROWS,
     PcapDataSource,
@@ -162,3 +166,44 @@ def test_vec_matches_dict_path_pcapng(tmp_path):
     got = _pydicts(native_arrow_batches(schema, path))
     want = _pydicts(dict_path_batches(schema, path))
     assert got == want
+
+
+def test_fallback_rows_hold_only_their_own_fields(tmp_path, monkeypatch):
+    # a fallback row's cells come from its own field dict alone: a field
+    # the dict lacks is null even where the fast path could have filled
+    # it (eth.*, ip.*, frame.raw); fast-path rows are unaffected
+    frames = [
+        build_eth_arp(1, bytes(range(6)), "10.0.0.1", bytes(6), "10.0.0.2"),
+        build_eth_ipv4_icmp("10.0.0.1", "10.0.0.2", 8, 0, 1, 1),
+        build_eth_ipv6_udp(bytes(16), bytes(15) + b"\1", 5000, 53,
+                           dns_query_payload("example.com")),
+        build_eth_ipv4_tcp("10.0.0.1", "10.0.0.2", 40000, 80, 1, 0,
+                           0x10, b""),
+    ]
+    path = str(tmp_path / "mixed.pcap")
+    with open(path, "wb") as fh:
+        fh.write(build_pcap([(1_700_000_000.0 + i, f)
+                             for i, f in enumerate(frames)]))
+    kept = ("frame.number", "frame.protocols")
+    real = native_vec._packet_fields
+    monkeypatch.setattr(native_vec, "_packet_fields", lambda *a: {
+        k: v for k, v in real(*a).items() if k in kept})
+    names = PcapDataSource({
+        "path": path, "engine": "native",
+        "protocols": "frame,eth,ip,arp,icmp,ipv6,tcp,udp"}).schema().fieldNames()
+    assert "frame.raw" in names and "eth.type" in names
+    batches, split = native.open_record_batches(path)
+    (recs,) = list(batches)
+    cols = native_vec.batch_columns(recs, names, split, 1, True)
+
+    def cell(nm, i):
+        v = cols[nm]
+        if isinstance(v, tuple):
+            return v[0][i].item() if v[1][i] else None
+        return v[i]
+
+    for i in range(3):
+        assert {nm for nm in names if cell(nm, i) is not None} == set(kept)
+    assert cell("ip.src", 3) == "10.0.0.1"
+    assert cell("eth.type", 3) == 0x0800
+    assert cell("frame.raw", 3) == frames[3].hex()

@@ -248,21 +248,22 @@ def batch_columns(recs: tuple, names: list[str], split: bool,
         if col is not None:
             col[i] = v
 
+    # the fast-path string loops skip fallback rows: those get exactly
+    # the fields of their own dict, so a field absent there stays null
     if include_raw and "frame.raw" in lists:
         raw_col = lists["frame.raw"]
-        for i in range(n):
+        for i in np.flatnonzero(~fallback).tolist():
             raw_col[i] = datas[i].hex()
 
     if "eth.dst" in lists or "eth.src" in lists:
-        for i in np.flatnonzero(eth_ok):
+        for i in np.flatnonzero(eth_ok & ~fallback):
             d = datas[i]
             put("eth.dst", i, d[0:6].hex(":"))
             put("eth.src", i, d[6:12].hex(":"))
 
-    ip_rows_all = np.flatnonzero(m)
     s32l, d32l = src32.tolist(), dst32.tolist()
     if "ip.src" in lists or "ip.dst" in lists:
-        for i in ip_rows_all:
+        for i in np.flatnonzero(m & ~fallback):
             put("ip.src", i, _ipv4(struct.pack(">I", s32l[i])))
             put("ip.dst", i, _ipv4(struct.pack(">I", d32l[i])))
 
@@ -354,6 +355,8 @@ def batch_columns(recs: tuple, names: list[str], split: bool,
 
     # ---- full-row fallback: the exact dict path ----------------------------
     if len(fb_rows):
+        for _arr, valid in cols.values():
+            valid[fb_rows] = False
         fnl = frame_no.tolist()
         ltl = lt.tolist()
         for i in fb_rows.tolist():
@@ -361,23 +364,17 @@ def batch_columns(recs: tuple, names: list[str], split: bool,
                                     origs_l[i], datas[i], ltl[i],
                                     include_raw)
             protocols[i] = fields.get("frame.protocols")
-            get = fields.get
-            for nm in names:
-                if nm == "frame.protocols":
+            for nm, v in fields.items():
+                if v is None:
                     continue
                 entry = cols.get(nm)
                 if entry is not None:
-                    arr, valid = entry
-                    v = get(nm)
-                    if v is None:
-                        valid[i] = False
-                    else:
-                        arr[i] = v
-                        valid[i] = True
+                    entry[0][i] = v
+                    entry[1][i] = True
                 else:
                     col = lists.get(nm)
                     if col is not None:
-                        col[i] = get(nm)
+                        col[i] = v
 
     out: dict = {}
     for nm in names:

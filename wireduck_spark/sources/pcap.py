@@ -38,6 +38,7 @@ cpp:126,180):
 from __future__ import annotations
 
 import glob as globmod
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -564,6 +565,37 @@ class PcapReader(DataSourceReader):
                 yield from batches(remap(lines))
 
 
+def _package_zip(pkg_dir: str, out_dir: str) -> str:
+    """Zip the ``.py`` files under ``pkg_dir`` as package
+    ``wireduck_spark`` into ``out_dir`` and return the zip's path.
+
+    The name carries a hash of every file's relative path and bytes, so
+    an edited tree gets a new zip and an unchanged one reuses its zip.
+    Workers put the shipped zip ahead of PYTHONPATH, so a zip left over
+    from older code would run that code in every worker."""
+    files = sorted(
+        os.path.relpath(os.path.join(root, fn), pkg_dir)
+        for root, _dirs, names in os.walk(pkg_dir)
+        for fn in names if fn.endswith(".py")
+    )
+    digest = hashlib.sha256()
+    for rel in files:
+        with open(os.path.join(pkg_dir, rel), "rb") as fh:
+            data = fh.read()
+        digest.update(f"{rel}\0{len(data)}\0".encode())
+        digest.update(data)
+    zip_path = os.path.join(
+        out_dir, f"wireduck_spark-{digest.hexdigest()[:16]}.zip")
+    if not os.path.exists(zip_path):
+        tmp = f"{zip_path}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w") as zf:
+            for rel in files:
+                zf.write(os.path.join(pkg_dir, rel),
+                         os.path.join("wireduck_spark", rel))
+        os.replace(tmp, zip_path)
+    return zip_path
+
+
 def _ship_package(spark) -> None:
     """Make wireduck_spark importable inside Spark's Python workers.
 
@@ -575,21 +607,7 @@ def _ship_package(spark) -> None:
     import wireduck_spark
 
     pkg_dir = os.path.dirname(os.path.abspath(wireduck_spark.__file__))
-    zip_path = os.path.join(
-        tempfile.gettempdir(),
-        f"wireduck_spark-{wireduck_spark.__version__}.zip",
-    )
-    if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path + ".tmp", "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for fn in files:
-                    if fn.endswith(".py"):
-                        full = os.path.join(root, fn)
-                        rel = os.path.join(
-                            "wireduck_spark", os.path.relpath(full, pkg_dir)
-                        )
-                        zf.write(full, rel)
-        os.replace(zip_path + ".tmp", zip_path)
+    zip_path = _package_zip(pkg_dir, tempfile.gettempdir())
     try:
         spark.sparkContext.addPyFile(zip_path)
     except Exception:
