@@ -107,118 +107,6 @@ def test_stateful_running_totals(spark, sf_dir, events_dir):
     assert got == expected
 
 
-def test_tws_totals_match_legacy_state(spark, sf_dir, events_dir):
-    """Dual-path check (SURVEY §8 item 3): the transformWithStateInPandas
-    port of the running-totals operator produces exactly the per-user
-    totals of the applyInPandasWithState original and of the batch
-    groupBy — the migration story for when the legacy state API ages
-    out. Skips on PySpark builds without the new API."""
-    from wireduck_spark.streaming.stateful import (
-        has_transform_with_state, running_user_totals_tws,
-    )
-
-    if not has_transform_with_state():
-        pytest.skip("transformWithStateInPandas unavailable: needs the "
-                    "protobuf package (absent in this container, installs "
-                    "off-limits) — see has_transform_with_state docstring")
-    # transformWithState's multi-column-family state requires the RocksDB
-    # provider (the default HDFS-backed store has no column families)
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        stream = read_events_stream(spark, events_dir)
-        q = (
-            running_user_totals_tws(stream)
-            .writeStream.format("memory")
-            .queryName("t_user_totals_tws")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prior is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prior)
-    got = {
-        r["user_id"]: (r["n_events"], r["sum_cents"])
-        for r in spark.sql("SELECT * FROM t_user_totals_tws").collect()
-    }
-    e = table(spark, sf_dir, "events")
-    expected = {
-        r["user_id"]: (r["n"], r["cents"])
-        for r in e.groupBy("user_id")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.round(F.col("value") * 100, 0).cast("bigint")).alias("cents"),
-        )
-        .collect()
-    }
-    assert got == expected
-
-
-def test_stateful_timeout_branch():
-    """The eviction path (hasTimedOut -> remove + expired=true row) and the
-    timeout arming, exercised with a fake GroupState — no streaming query
-    needed (and none could finish: see test above)."""
-    import pandas as pd
-
-    from wireduck_spark.streaming.stateful import make_update_fn
-
-    class FakeState:
-        def __init__(self, value=None, timed_out=False):
-            self._v = value
-            self.hasTimedOut = timed_out
-            self.removed = False
-            self.timeout_set = None
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-        def remove(self):
-            self.removed = True
-            self._v = None
-
-        def setTimeoutDuration(self, ms):
-            self.timeout_set = ms
-
-    fn = make_update_fn(60_000)
-
-    # accumulate branch: folds rows, arms the timeout
-    st = FakeState((2, 300))
-    [out] = fn((7,), [pd.DataFrame({"value": [1.0, 2.5]})], st)
-    assert st._v == (4, 650) and st.timeout_set == 60_000
-    assert out["expired"].tolist() == [False]
-    assert out["sum_cents"].tolist() == [650]
-
-    # eviction branch: emits the final totals flagged expired, drops state
-    st = FakeState((4, 650), timed_out=True)
-    [out] = fn((7,), [], st)
-    assert st.removed
-    assert out["expired"].tolist() == [True]
-    assert out["n_events"].tolist() == [4]
-
-    # no-timeout variant never arms a timeout
-    st = FakeState()
-    fn_nt = make_update_fn(None)
-    [_] = fn_nt((7,), [pd.DataFrame({"value": [1.0]})], st)
-    assert st.timeout_set is None
-
-
 def test_dedup_stream_drops_replays(spark, sf_dir, tmp_path):
     """The same events file landing twice (at-least-once replay) dedups
     back to the batch-distinct count via dropDuplicatesWithinWatermark."""
@@ -1392,66 +1280,6 @@ def test_heavy_hitter_tracker_exact_when_under_capacity(
     assert got == expected
 
 
-def test_spacesaving_guarantees_under_eviction(monkeypatch):
-    """Capacity-stressed unit test of the SpaceSaving invariants with a
-    fake GroupState and HH_CAPACITY=3: est >= true >= est - err for
-    every monitored key, any key with true count > n/capacity is
-    present, and the monitor never exceeds capacity. Also replays the
-    same stream in one batch vs three micro-batches: the per-batch
-    pre-sum keeps the final monitor identical."""
-    import pandas as pd
-
-    import wireduck_spark.streaming.stateful as ss
-
-    monkeypatch.setattr(ss, "HH_CAPACITY", 3)
-
-    class FakeState:
-        def __init__(self):
-            self._v = None
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    # 40 events over 6 keys: 1 and 2 are true heavy hitters
-    seq = [1] * 16 + [2] * 12 + [3, 4, 5, 6] * 3
-    true = {k: seq.count(k) for k in set(seq)}
-    n = len(seq)
-
-    def run(chunks):
-        st = FakeState()
-        for ch in chunks:
-            [_] = ss._spacesaving_update(
-                (0,), [pd.DataFrame({"user_id": ch})], st)
-        return {
-            int(u): (int(e), int(r))
-            for u, e, r in (ent.split(":")
-                            for ent in st._v[0].split(";"))
-        }
-
-    mon = run([seq])
-    assert len(mon) == 3
-    for u, (est, err) in mon.items():
-        assert est >= true[u] >= est - err
-    for u, c in true.items():
-        if c > n / 3:
-            assert u in mon, f"guaranteed heavy hitter {u} evicted"
-
-    mon3 = run([seq[:15], seq[15:30], seq[30:]])
-    assert mon3.keys() == mon.keys()
-    # one-shot vs chunked may differ in err bookkeeping order, but the
-    # guaranteed invariants hold identically
-    for u, (est, err) in mon3.items():
-        assert est >= true[u] >= est - err
-
-
 # ---------------------------------------------------------------------------
 # Streaming Brier calibration tracker
 # ---------------------------------------------------------------------------
@@ -2240,18 +2068,6 @@ def test_ph_tracker_forced_chunks(spark, sf_dir, tmp_path):
     assert got == _ph_batch_expected(spark, sf_dir)
 
 
-def test_ph_tracker_negative_series_tdiv():
-    """_tdiv must truncate toward zero exactly like Spark `div` /
-    DuckDB `//` on negative numerators (Python // floors): the tracker
-    must not silently diverge on a hypothetical refund-heavy series."""
-    from wireduck_spark.streaming.stateful import _tdiv
-    assert _tdiv(-7, 2) == -3          # Python -7 // 2 == -4
-    assert _tdiv(7, 2) == 3
-    assert _tdiv(-100, 100) == -1
-    assert _tdiv(-99, 100) == 0        # Python -99 // 100 == -1
-    assert _tdiv(0, 4) == 0
-
-
 # ---------------------------------------------------------------------------
 # Streaming EWMA control-chart tracker
 # ---------------------------------------------------------------------------
@@ -2331,296 +2147,3 @@ def test_ewma_chart_tracker_forced_chunks(spark, sf_dir, tmp_path):
         else:
             spark.conf.set(key, prev)
     assert got == _ewma_chart_batch_expected(spark, sf_dir)
-
-
-# ---------------------------------------------------------------------------
-# Round-12 tracker review fixes (driven directly via a GroupState stub —
-# the update fns are plain callables)
-# ---------------------------------------------------------------------------
-
-
-class _StubState:
-    def __init__(self, value=None):
-        self._v = value
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    @property
-    def hasTimedOut(self):
-        return False
-
-    def update(self, v):
-        self._v = tuple(v)
-
-    def setTimeoutDuration(self, ms):
-        pass
-
-
-def test_cents_series_spark_parity_and_null_skip():
-    """Per-event HALF_UP cents (registry.cents semantics) — pandas
-    .round() is HALF_TO_EVEN and diverged at exact half-cents; NaN maps
-    to <NA> instead of crashing the int64 cast (r12 review)."""
-    import numpy as np
-
-    from wireduck_spark.streaming.stateful import _cents_series
-
-    s = _cents_series(pd.Series([0.125, 0.005, 1.0, np.nan, 0.135]))
-    # 12.5 -> 13 and 0.5 -> 1 (HALF_UP; banker's gives 12 and 0)
-    assert list(s[:3]) == [13, 1, 100]
-    assert pd.isna(s[3])
-    assert s[4] == 14  # 13.5 -> 14 either way (sanity)
-
-
-def test_user_totals_chunk_split_invariant_and_null_safe():
-    """Totals must equal the batch SUM of per-event rounded cents, not a
-    rounding of the chunk sum: two 0.004 events are 0 cents however they
-    are chunked (old code: 1 when co-chunked), and a NULL value counts
-    the row but adds nothing (r12 review)."""
-    from wireduck_spark.streaming.stateful import make_update_fn
-
-    fn = make_update_fn(None)
-    one_chunk = _StubState()
-    [out1] = list(fn((7,), [pd.DataFrame({"value": [0.004, 0.004, None]})],
-                     one_chunk))
-    split = _StubState()
-    list(fn((7,), [pd.DataFrame({"value": [0.004]})], split))
-    [out2] = list(fn((7,), [pd.DataFrame({"value": [0.004, None]})], split))
-    for out in (out1, out2):
-        assert out["n_events"][0] == 3
-        assert out["sum_cents"][0] == 0
-
-
-def test_granger_constant_series_emits_instead_of_crashing():
-    """A constant lagged series gives det == 0: the divisions must follow
-    IEEE (inf/nan) like the batch twin's Spark doubles, not raise
-    ZeroDivisionError and kill the stream (r12 review)."""
-    from wireduck_spark.streaming.stateful import _granger_update
-
-    st = _StubState()
-    days = pd.DataFrame({
-        "d": pd.date_range("2024-01-01", periods=6).date,
-        "x": [5] * 6,
-        "y": [5] * 6,
-    })
-    [out] = list(_granger_update((0,), [days], st))
-    assert len(out) == 1  # emitted a row, not an exception
-    assert out["m"][0] if "m" in out else True
-
-
-def test_funnel_null_ts_does_not_corrupt_stage():
-    """A NaT timestamp must be ignored (batch MIN(CASE) skips NULL), not
-    cast to INT64_MIN where it wins every min-merge and inflates the
-    stage forever (r12 review)."""
-    from wireduck_spark.streaming.stateful import _funnel_update
-
-    st = _StubState()
-    pdf = pd.DataFrame({
-        "ts": [pd.NaT, pd.Timestamp("2024-01-01 10:00:00")],
-        "event_type": ["view", "click"],
-    })
-    [out] = list(_funnel_update((3,), [pdf], st))
-    # no valid view -> stage 0 (NaT view must not count as first-seen)
-    assert out["stage"][0] == 0
-
-
-def test_distinct_tracker_comma_type_survives_state_roundtrip():
-    """Set state is JSON-packed: an event_type containing a comma is ONE
-    type across batches, not two phantom types on restore (r12 review);
-    legacy CSV states still restore."""
-    from wireduck_spark.streaming.stateful import _distinct_update
-
-    st = _StubState()
-    [o1] = list(_distinct_update((1,), [pd.DataFrame(
-        {"event_type": ["a,b"]})], st))
-    assert o1["n_distinct_types"][0] == 1
-    [o2] = list(_distinct_update((1,), [pd.DataFrame(
-        {"event_type": ["a,b"]})], st))
-    assert o2["n_distinct_types"][0] == 1  # CSV restore would say 2
-    legacy = _StubState(("x,y",))  # pre-r12 CSV state: best-effort split
-    [o3] = list(_distinct_update((1,), [pd.DataFrame(
-        {"event_type": []}, dtype=str)], legacy))
-    assert o3["n_distinct_types"][0] == 2
-
-
-# ---------------------------------------------------------------------------
-# Day-ordered contract enforcement (r13): every daily-fold tracker must
-# RAISE on a late or replayed day — the kendall/trend-duo loud rule made
-# consistent — instead of silently folding it into permanently corrupted
-# state. Direct-drive via _StubState (the r12 hardening pattern): batch 1
-# establishes the last_day watermark, batch 2 violates it.
-# ---------------------------------------------------------------------------
-
-
-def _days_pdf(days, **cols):
-    import datetime as dt
-
-    return pd.DataFrame(
-        {"d": [dt.date.fromisoformat(x) for x in days], **cols})
-
-
-@pytest.mark.parametrize(
-    "fn_name,mk_pdf",
-    [
-        ("_cusum_update",
-         lambda days: _days_pdf(days, cents=[100] * len(days))),
-        ("_ph_update",
-         lambda days: _days_pdf(days, cents=[100] * len(days))),
-        ("_ewma_chart_update",
-         lambda days: _days_pdf(days, cents=[100] * len(days))),
-        ("_acf_update",
-         lambda days: _days_pdf(days, x=[5] * len(days))),
-        ("_granger_update",
-         lambda days: _days_pdf(days, x=[5] * len(days),
-                                y=[7] * len(days))),
-        # holt's source casts d to an ISO string — _day_str must treat
-        # both representations identically
-        ("_holt_update",
-         lambda days: pd.DataFrame({"d": list(days),
-                                    "cents": [100] * len(days)})),
-        # kendall/trend-duo raised on a PRIOR week already (ADVICE r10);
-        # the r13 watermark must also catch same-week replays/reorders
-        ("_kendall_update",
-         lambda days: _days_pdf(days, x=[5] * len(days),
-                                y=[7] * len(days))),
-        ("_trend_duo_update",
-         lambda days: _days_pdf(days, y=[7] * len(days))),
-    ],
-)
-def test_daily_trackers_reject_out_of_order_and_replayed_days(
-        fn_name, mk_pdf):
-    import wireduck_spark.streaming.stateful as st_mod
-
-    fn = getattr(st_mod, fn_name)
-    key = (0,) if fn_name in ("_acf_update", "_granger_update",
-                              "_kendall_update", "_trend_duo_update") \
-        else ("purchase",)
-
-    # late day (strictly older than the watermark)
-    st = _StubState()
-    list(fn(key, [mk_pdf(["2024-01-01", "2024-01-02"])], st))
-    with pytest.raises(ValueError, match="day-ordered"):
-        list(fn(key, [mk_pdf(["2024-01-01"])], st))
-
-    # replayed day (== watermark) — would fold the same total twice
-    st = _StubState()
-    list(fn(key, [mk_pdf(["2024-01-01", "2024-01-02"])], st))
-    with pytest.raises(ValueError, match="day-ordered"):
-        list(fn(key, [mk_pdf(["2024-01-02"])], st))
-
-    # duplicate day WITHIN one batch: the same contract violation for
-    # the pre-aggregated daily-total trackers; holt instead groupbys its
-    # per-event rows to day totals first (its documented "complete day
-    # per micro-batch" contract), so two same-day rows are ONE day there.
-    st = _StubState()
-    if fn_name == "_holt_update":
-        list(fn(key, [mk_pdf(["2024-01-03", "2024-01-03"])], st))
-        assert st.get[0] == 200  # level seeded from the 100+100 day total
-    else:
-        with pytest.raises(ValueError, match="day-ordered"):
-            list(fn(key, [mk_pdf(["2024-01-03", "2024-01-03"])], st))
-
-    # in-order continuation stays green and advances the watermark
-    st = _StubState()
-    list(fn(key, [mk_pdf(["2024-01-01", "2024-01-02"])], st))
-    list(fn(key, [mk_pdf(["2024-01-03"])], st))
-    assert "2024-01-03" in st.get
-
-
-def test_beacon_tracker_rejects_out_of_order_event():
-    """An event older than the folded last_ts watermark would add a
-    NEGATIVE gap to the S/Q sums — raise instead (r13); an event at
-    exactly the watermark is a legal zero gap, and NaT rows are dropped
-    rather than misread as out-of-order INT64_MIN timestamps."""
-    from wireduck_spark.streaming.stateful import _beacon_update
-
-    key = (1, "purchase")
-
-    def pdf(ts_list, ids=None):
-        return pd.DataFrame({
-            "ts": pd.to_datetime(ts_list),
-            "event_id": ids or list(range(len(ts_list))),
-        })
-
-    st = _StubState()
-    list(_beacon_update(key, [pdf(["2024-01-01 10:00:00",
-                                   "2024-01-01 10:05:00"])], st))
-    with pytest.raises(ValueError, match="event-time-ordered"):
-        list(_beacon_update(key, [pdf(["2024-01-01 10:01:00"])], st))
-
-    # equal timestamp: a zero gap, exactly what the batch LAG computes
-    st = _StubState()
-    list(_beacon_update(key, [pdf(["2024-01-01 10:00:00"])], st))
-    [out] = list(_beacon_update(
-        key, [pdf(["2024-01-01 10:00:00", "2024-01-01 10:04:00",
-                   "2024-01-01 10:08:00"])], st))
-    assert out["n_gaps"][0] == 3 and out["sum_gap_s"][0] == 480
-
-    # NaT is dropped, not folded and not misread as out-of-order
-    st = _StubState()
-    list(_beacon_update(key, [pdf(["2024-01-01 10:00:00"])], st))
-    list(_beacon_update(key, [pdf([pd.NaT, "2024-01-01 10:05:00"])], st))
-    assert st.get[1] == 1  # exactly one gap counted
-
-
-# ---------------------------------------------------------------------------
-# r14 (SURVEY §13 item 1c, pulled forward): the eight daily-fold trackers
-# under out-of-contract micro-batch shapes the r13 replay matrix did not
-# cover — an ALL-EMPTY micro-batch on warm state (must re-emit without
-# touching state) and a PARTIAL DAY split across two micro-batches (the
-# second batch re-presents the folded day: the day-ordered watermark must
-# raise, because the first fold already smoothed a partial total).
-# ---------------------------------------------------------------------------
-
-
-def _days_frame(days, **cols):
-    base = {"d": days}
-    base.update({k: v[: len(days)] if len(v) > len(days) else v
-                 for k, v in cols.items()})
-    return pd.DataFrame(base)
-
-
-_DAILY_TRACKER_CASES = [
-    ("holt", "_holt_update",
-     lambda d: _days_frame(d, cents=[100] * len(d))),
-    ("cusum", "_cusum_update",
-     lambda d: _days_frame(d, cents=[100] * len(d))),
-    ("page_hinkley", "_ph_update",
-     lambda d: _days_frame(d, cents=[100] * len(d))),
-    ("ewma_chart", "_ewma_chart_update",
-     lambda d: _days_frame(d, cents=[100] * len(d))),
-    ("acf", "_acf_update",
-     lambda d: _days_frame(d, x=[100] * len(d))),
-    ("granger", "_granger_update",
-     lambda d: _days_frame(d, x=[100] * len(d), y=[50] * len(d))),
-    ("kendall", "_kendall_update",
-     lambda d: _days_frame(d, x=[100] * len(d), y=[50] * len(d))),
-    ("trend_duo", "_trend_duo_update",
-     lambda d: _days_frame(d, y=[100] * len(d))),
-]
-
-
-@pytest.mark.parametrize(
-    "name,fn_name,mk", _DAILY_TRACKER_CASES,
-    ids=[c[0] for c in _DAILY_TRACKER_CASES])
-def test_daily_tracker_empty_batch_and_partial_day(name, fn_name, mk):
-    from wireduck_spark.streaming import stateful
-
-    fn = getattr(stateful, fn_name)
-    key = ("click",)
-    st = _StubState()
-    list(fn(key, [mk(["2024-01-01", "2024-01-02"])], st))
-    warm = st.get
-
-    # all-empty micro-batch: emit-only, state untouched
-    list(fn(key, [mk([])], st))
-    assert st.get == warm, f"{name}: empty batch mutated state"
-
-    # partial day split across batches: the re-presented day must raise
-    with pytest.raises(ValueError, match="day-ordered|day .* arrived"):
-        list(fn(key, [mk(["2024-01-02"])], st))
