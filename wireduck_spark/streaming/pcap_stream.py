@@ -52,6 +52,7 @@ from wireduck_spark.sources.pcap import (
     native_arrow_batches,
 )
 from wireduck_spark.sources.typemap import map_ft_type
+from wireduck_spark.streaming.stateful import _apply_fold, _fold_update
 
 
 @dataclass
@@ -221,52 +222,39 @@ FLOWLET_OUTPUT_SCHEMA = StructType(
 _FLOWLET_GAP_US = 5_000_000
 
 
-def _flowlet_update(key, batches, state):
+def _flowlet_fold(key, st, pdf):
     """Per-stream flowlet accumulator: packets extend the open flowlet
     until a >5 s inactivity gap CLOSES it (emitted) and opens the next —
     the reference roadmap's flow-reassembly case as Spark-native state.
     State is 5 ints per live stream; closed flowlets leave state
     entirely. Emission happens only at gaps: the final open flowlet per
     stream stays in state (a timeout would finalize it in a live
-    deployment — the session_tracker availableNow caveat applies)."""
-    (stream,) = key
-    seq, start_us, last_us, n, payload = (
-        state.get if state.exists else (1, None, None, 0, 0)
-    )
-    out = {k: [] for k in
-           ("stream", "flowlet_id", "n_packets", "payload_bytes",
-            "duration_s")}
-    import pandas as pd
+    deployment — the session_tracker availableNow caveat applies).
+    The harness sorts the whole group once by capture time: a group
+    larger than the Arrow batch size arrives as SEVERAL chunks in
+    arbitrary shuffle order, and group size per micro-batch is bounded
+    by the trigger, not the capture."""
+    seq, start_us, last_us, n, payload = st
+    out = []
+    for t, plen in zip(pdf["ts_us"].astype("int64"),
+                       pdf["plen"].astype("int64")):
+        t = int(t)
+        if last_us is not None and t - last_us > _FLOWLET_GAP_US:
+            out.append((key[0], int(seq), int(n), int(payload),
+                        round((last_us - start_us) / 1e6, 3)))
+            seq, start_us, n, payload = seq + 1, t, 0, 0
+        if start_us is None:
+            start_us = t
+        last_us = t
+        n += 1
+        payload += int(plen)
+    return (int(seq), int(start_us), int(last_us), int(n),
+            int(payload)), out
 
-    # A group larger than the Arrow batch size arrives as SEVERAL chunks
-    # in arbitrary shuffle order; per-chunk sorting cannot restore global
-    # time order for long streams (>10k packets per micro-batch), so
-    # materialize the whole group and sort ONCE. Group size per
-    # micro-batch is bounded by the trigger, not the capture.
-    chunks = [c for c in batches if len(c)]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True).sort_values(
-            ["ts_us", "fno"]
-        )
-        for t, plen in zip(pdf["ts_us"].astype("int64"),
-                           pdf["plen"].astype("int64")):
-            t = int(t)
-            if last_us is not None and t - last_us > _FLOWLET_GAP_US:
-                out["stream"].append(stream)
-                out["flowlet_id"].append(int(seq))
-                out["n_packets"].append(int(n))
-                out["payload_bytes"].append(int(payload))
-                out["duration_s"].append(
-                    round((last_us - start_us) / 1e6, 3))
-                seq, start_us, n, payload = seq + 1, t, 0, 0
-            if start_us is None:
-                start_us = t
-            last_us = t
-            n += 1
-            payload += int(plen)
-    state.update((int(seq), int(start_us), int(last_us), int(n),
-                  int(payload)))
-    yield pd.DataFrame(out)
+
+_flowlet_update = _fold_update(
+    _flowlet_fold, FLOWLET_STATE_SCHEMA, FLOWLET_OUTPUT_SCHEMA,
+    (1, None, None, 0, 0), "append", order=("ts_us", "fno"))
 
 
 def flowlet_tracker(packets) -> "DataFrame":
@@ -281,7 +269,6 @@ def flowlet_tracker(packets) -> "DataFrame":
     state at emission); the shuffle key is the 64-bit stream id.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     src = packets.select(
         F.col("`tcp.stream`").alias("stream"),
@@ -290,13 +277,7 @@ def flowlet_tracker(packets) -> "DataFrame":
         F.col("`frame.number`").alias("fno"),
         F.col("`tcp.len`").alias("plen"),
     )
-    return src.groupBy("stream").applyInPandasWithState(
-        _flowlet_update,
-        outputStructType=FLOWLET_OUTPUT_SCHEMA,
-        stateStructType=FLOWLET_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _apply_fold(src, _flowlet_update, "stream")
 
 
 # ---------------------------------------------------------------------------
@@ -339,7 +320,7 @@ def _vrank(v: int) -> int:
 _VN_CAND_CAP = 32
 
 
-def _vn_update(key, batches, state):
+def _vn_fold(key, st, pdf):
     """State per client: first-Initial (time, version), first VN arrival
     time, first post-VN retry version (-1 sentinels), plus a bounded
     buffer of Initial (time, version) candidates kept while no VN has
@@ -353,32 +334,23 @@ def _vn_update(key, batches, state):
     retry keeps the resolved version — beyond the buffered window the
     stream follows first-resolution semantics). The downgrade verdict
     re-derives the batch query's rank comparison each micro-batch.
-    Chunk-safe: concat all Arrow chunks, sort ONCE by capture time."""
-    import pandas as pd
-
-    (client,) = key
-    first_ft, first_v, vn_ft, retry_v = -1, -1, -1, -1
-    cands: list[tuple[int, int]] = []
-    if state.exists:
-        first_ft, first_v, vn_ft, retry_v, cft, cv = state.get
-        cands = [(int(a), int(b)) for a, b in zip(cft or (), cv or ())]
-    chunks = [c for c in batches if len(c)]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True).sort_values("ft_us")
-        for ft, ver, isvn in zip(
-            pdf["ft_us"].astype("int64"),
-            pdf["version"].astype("int64"),
-            pdf["is_vn"],
-        ):
-            ft, ver = int(ft), int(ver)
-            if isvn:
-                if vn_ft < 0 or ft < vn_ft:
-                    vn_ft = ft
-            else:
-                if first_ft < 0 or ft < first_ft:
-                    first_ft, first_v = ft, ver
-                if retry_v < 0:
-                    cands.append((ft, ver))
+    The harness sorts the whole group once by capture time."""
+    first_ft, first_v, vn_ft, retry_v, cft, cv = st
+    cands = [(int(a), int(b)) for a, b in zip(cft or (), cv or ())]
+    for ft, ver, isvn in zip(
+        pdf["ft_us"].astype("int64"),
+        pdf["version"].astype("int64"),
+        pdf["is_vn"],
+    ):
+        ft, ver = int(ft), int(ver)
+        if isvn:
+            if vn_ft < 0 or ft < vn_ft:
+                vn_ft = ft
+        else:
+            if first_ft < 0 or ft < first_ft:
+                first_ft, first_v = ft, ver
+            if retry_v < 0:
+                cands.append((ft, ver))
     if vn_ft >= 0 and retry_v < 0:
         later = sorted(c for c in cands if c[0] > vn_ft)
         if later:
@@ -388,8 +360,6 @@ def _vn_update(key, batches, state):
     # resolve in-loop next batch). While still VN-less, keep the
     # earliest _VN_CAND_CAP candidates.
     cands = [] if vn_ft >= 0 else sorted(cands)[:_VN_CAND_CAP]
-    state.update((first_ft, first_v, vn_ft, retry_v,
-                  [c[0] for c in cands], [c[1] for c in cands]))
     out = []
     if first_ft >= 0:
         downgrade = int(
@@ -397,9 +367,15 @@ def _vn_update(key, batches, state):
             and _vrank(first_v) > 0
             and _vrank(retry_v) < _vrank(first_v)
         )
-        out.append((client, first_v, int(vn_ft >= 0),
+        out.append((key[0], first_v, int(vn_ft >= 0),
                     retry_v if retry_v >= 0 else None, downgrade))
-    yield pd.DataFrame(out, columns=[f.name for f in VN_OUTPUT_SCHEMA.fields])
+    return (first_ft, first_v, vn_ft, retry_v,
+            [c[0] for c in cands], [c[1] for c in cands]), out
+
+
+_vn_update = _fold_update(
+    _vn_fold, VN_STATE_SCHEMA, VN_OUTPUT_SCHEMA, (-1, -1, -1, -1, [], []),
+    order=("ft_us",))
 
 
 def vn_downgrade_tracker(packets) -> "DataFrame":
@@ -415,7 +391,6 @@ def vn_downgrade_tracker(packets) -> "DataFrame":
     (pinned by tests/test_streaming.py::test_vn_downgrade_stream_matches_batch).
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     # Same direction gate as the batch query: Initials count only in the
     # client direction (udp.dstport == 443) — real servers also send
@@ -435,10 +410,4 @@ def vn_downgrade_tracker(packets) -> "DataFrame":
             (F.col("`quic.version`") == 0).alias("is_vn"),
         )
     )
-    return q.groupBy("client").applyInPandasWithState(
-        _vn_update,
-        outputStructType=VN_OUTPUT_SCHEMA,
-        stateStructType=VN_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _apply_fold(q, _vn_update, "client")

@@ -1,13 +1,30 @@
-"""Custom stateful streaming operator via applyInPandasWithState
-(SURVEY.md §2: "stateful agg" / the reference-roadmap flow-reassembly
-case, re-expressed Spark-native).
+"""Stateful streaming trackers on applyInPandasWithState (SURVEY.md §2:
+"stateful agg" / the reference-roadmap flow-reassembly case,
+re-expressed Spark-native).
+
+Every tracker here except `running_user_totals` — and the flowlet and
+QUIC VN-downgrade trackers in pcap_stream.py — is a FOLD on one
+harness (`_fold_update` builds the update function, `_apply_fold` makes
+the groupBy + applyInPandasWithState call). A tracker supplies its
+source projection, its state's initial tuple and a fold step
+`(key, state, rows) -> (state, output rows)`; the harness restores and
+writes back the state and builds the output frame. It guarantees two
+things the folds rely on:
+
+- chunk-order independence: a group's Arrow chunks are joined once and
+  sorted once by the tracker's order columns, so how a micro-batch was
+  split into chunks never reaches an order-dependent fold;
+- the day-ordered watermark of the eight daily-fold trackers (holt,
+  cusum, acf, granger, kendall, trend-duo, page-hinkley, ewma-chart):
+  the harness owns their `last_day` state field, and a day at or before
+  it fails the stream before any state is written.
 
 `running_user_totals` keeps one state row per user (event count, value
-cents, last-seen timestamp) across micro-batches — the skeleton of packet
-flow reassembly (state key = flow 4-tuple instead of user_id) and of any
-large-scale streaming feature extractor. State is bounded by the
-processing-time timeout: idle keys are evicted and emitted with
-`expired=true`.
+cents) across micro-batches — the skeleton of packet flow reassembly
+(state key = flow 4-tuple instead of user_id) and of any large-scale
+streaming feature extractor. It keeps its own wiring because it is the
+one tracker with a processing-time timeout: idle keys are evicted and
+emitted with `expired=true`.
 
 STATE-SCHEMA COMPATIBILITY (r14, ADVICE r13): the r13 day-ordered
 contract appended a `last_day` StringType field to EIGHT tracker state
@@ -104,6 +121,76 @@ def _check_day_order(tracker: str, day: str, last_day: str) -> None:
             f"already folded — closed daily rows must be day-ordered "
             "and delivered exactly once (late/replayed/out-of-order "
             "upstream data)")
+
+
+def _fold_update(fold, state_schema: StructType, output_schema: StructType,
+                 init: tuple, mode: str = "update", *, order=(),
+                 dropna: str | None = None, prep=None,
+                 daily: str | None = None):
+    """Build a tracker's applyInPandasWithState update function
+    `(key, batches, state) -> Iterator[DataFrame]` from its fold step
+    `fold(key, st, pdf) -> (st, rows)`. The fold gets the state tuple and
+    ALL of the group's rows in this micro-batch as one frame (zero rows
+    when every chunk is empty), and returns the new state tuple plus its
+    output rows as tuples in output-schema order.
+
+    The wrapper restores the state (or starts from `init`), joins the
+    non-empty Arrow chunks once — a group larger than the Arrow batch
+    size arrives as several chunks in arbitrary order — applies `prep`,
+    drops rows whose `dropna` column is null, and sorts once by the
+    `order` columns the frame carries (lateness lists arrival_ord, which
+    only some sources have). With `daily` (the tracker name for the
+    diagnostic) it also owns the state's `last_day` field: the fold
+    neither sees nor returns it, every `d` reaches the fold as its
+    canonical 'YYYY-MM-DD' string, and a day at or before the watermark
+    raises before any state is written. Module globals the fold reads
+    (HH_CAPACITY) are looked up per call."""
+    names = output_schema.fieldNames()
+    wm = state_schema.fieldNames().index("last_day") if daily else None
+
+    def update(key, batches, state):
+        st = tuple(state.get) if state.exists else init
+        chunks = list(batches)
+        chunks = [c for c in chunks if len(c)] or chunks[:1]
+        pdf = pd.concat(chunks, ignore_index=True)
+        if prep is not None:
+            pdf = prep(pdf)
+        if dropna:
+            pdf = pdf[pdf[dropna].notna()]
+        by = [c for c in order if c in pdf.columns]
+        if by:
+            pdf = pdf.sort_values(by)
+        if daily:
+            last_day, st = st[wm] or "", st[:wm] + st[wm + 1:]
+            days = [_day_str(v) for v in pdf["d"]]
+            for day in days:
+                _check_day_order(daily, day, last_day)
+                last_day = day
+            pdf = pdf.assign(d=days)
+        st, rows = fold(key, st, pdf)
+        if daily:
+            st = st[:wm] + (last_day,) + st[wm:]
+        state.update(st)
+        yield pd.DataFrame(rows, columns=names)
+
+    update.__name__ = update.__qualname__ = fold.__name__.replace(
+        "_fold", "_update")
+    update.__module__ = fold.__module__
+    update.state_schema, update.output_schema = state_schema, output_schema
+    update.mode = mode
+    return update
+
+
+def _apply_fold(src: DataFrame, update, *keys: str) -> DataFrame:
+    """The one groupBy + applyInPandasWithState call of every fold
+    tracker (NoTimeout: state lives until the query's checkpoint does)."""
+    return src.groupBy(*keys).applyInPandasWithState(
+        update,
+        outputStructType=update.output_schema,
+        stateStructType=update.state_schema,
+        outputMode=update.mode,
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
 
 
 STATE_SCHEMA = StructType(
@@ -210,13 +297,11 @@ FUNNEL_OUTPUT_SCHEMA = StructType(
 _NONE = -1  # state sentinel: stage not yet seen
 
 
-def _funnel_update(
-    key: tuple,
-    batches: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    (user_id,) = key
-    tv, tc, tp = state.get if state.exists else (_NONE, _NONE, _NONE)
+def _funnel_fold(key, st, pdf):
+    """NaT ts rows are dropped by the harness: NaT casts to INT64_MIN,
+    which would win every min-merge and permanently inflate the user's
+    stage (r12 review); the batch twin's MIN(CASE ...) ignores NULL ts."""
+    tv, tc, tp = st
 
     def merge(cur: int, seen) -> int:
         if len(seen) == 0:
@@ -224,17 +309,11 @@ def _funnel_update(
         m = int(seen.min())
         return m if cur == _NONE else min(cur, m)
 
-    for pdf in batches:
-        # NaT casts to INT64_MIN, which would win every min-merge and
-        # permanently inflate the user's stage (r12 review); the batch
-        # twin's MIN(CASE ...) ignores NULL ts.
-        pdf = pdf[pdf["ts"].notna()]
-        us = pdf["ts"].values.astype("datetime64[us]").astype("int64")
-        et = pdf["event_type"].values
-        tv = merge(tv, us[et == "view"])
-        tc = merge(tc, us[et == "click"])
-        tp = merge(tp, us[et == "purchase"])
-    state.update((tv, tc, tp))
+    us = pdf["ts"].values.astype("datetime64[us]").astype("int64")
+    et = pdf["event_type"].values
+    tv = merge(tv, us[et == "view"])
+    tc = merge(tc, us[et == "click"])
+    tp = merge(tp, us[et == "purchase"])
     # strict ordering, identical to the batch event_funnel_ordered query
     stage = 0
     if tv != _NONE:
@@ -243,7 +322,12 @@ def _funnel_update(
             stage = 2
             if tp != _NONE and tp > tc:
                 stage = 3
-    yield pd.DataFrame({"user_id": [user_id], "stage": [stage]})
+    return (tv, tc, tp), [(key[0], stage)]
+
+
+_funnel_update = _fold_update(
+    _funnel_fold, FUNNEL_STATE_SCHEMA, FUNNEL_OUTPUT_SCHEMA,
+    (_NONE, _NONE, _NONE), dropna="ts")
 
 
 def funnel_stage_tracker(events: DataFrame) -> DataFrame:
@@ -261,13 +345,7 @@ def funnel_stage_tracker(events: DataFrame) -> DataFrame:
     State is 3 ints per user — bounded by the user population, not the
     event volume.
     """
-    return events.groupBy("user_id").applyInPandasWithState(
-        _funnel_update,
-        outputStructType=FUNNEL_OUTPUT_SCHEMA,
-        stateStructType=FUNNEL_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _apply_fold(events, _funnel_update, "user_id")
 
 
 # ---------------------------------------------------------------------------
@@ -288,54 +366,34 @@ ANOMALY_OUTPUT_SCHEMA = StructType(
 )
 
 
-def _anomaly_update(
-    key: tuple,
-    batches: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
+def _anomaly_fold(key, st, pdf):
     """Per-user trailing-20 deque; flags events via the same integer-exact
     inequality as the batch anomaly_zscore_trailing query:
-    (n*x - S)^2 > 9*(n*Q - S^2), all in int64 cents (population sigma)."""
-    (user_id,) = key
-    hist: list[int] = []
-    if state.exists:
-        (packed,) = state.get
-        if packed:
-            hist = [int(v) for v in packed.split(",")]
-    out_ids, out_x, out_n = [], [], []
-    # Concatenate ALL chunks before the single sort: a >Arrow-batch-size
-    # group arrives as several chunks in arbitrary order, and the
-    # trailing deque walks event-time order (same multi-chunk rule as
-    # the flowlet/lateness trackers, round-5 advisory).
-    chunks = [c for c in batches if len(c)]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event_id"])
-        cents_s = _cents_series(pdf["value"])
-        keep = cents_s.notna()  # NULL cents never enter the deque
-        for eid, x in zip(pdf.loc[keep, "event_id"].astype("int64"),
-                          cents_s[keep]):
-            n = len(hist)
-            if n >= 5:
-                s = sum(hist)
-                q = sum(v * v for v in hist)
-                dev = n * int(x) - s
-                if dev * dev > 9 * (n * q - s * s):
-                    out_ids.append(int(eid))
-                    out_x.append(int(x))
-                    out_n.append(n)
-            hist.append(int(x))
-            if len(hist) > 20:
-                hist.pop(0)
-    state.update((",".join(str(v) for v in hist),))
-    yield pd.DataFrame(
-        {
-            "event_id": out_ids,
-            "user_id": [user_id] * len(out_ids),
-            "x": out_x,
-            "n_history": out_n,
-        }
-    )
+    (n*x - S)^2 > 9*(n*Q - S^2), all in int64 cents (population sigma).
+    The deque walks event-time order (the harness sorts by ts, event_id)."""
+    (packed,) = st
+    hist = [int(v) for v in packed.split(",")] if packed else []
+    out = []
+    cents_s = _cents_series(pdf["value"])
+    keep = cents_s.notna()  # NULL cents never enter the deque
+    for eid, x in zip(pdf.loc[keep, "event_id"].astype("int64"),
+                      cents_s[keep]):
+        n = len(hist)
+        if n >= 5:
+            s = sum(hist)
+            q = sum(v * v for v in hist)
+            dev = n * int(x) - s
+            if dev * dev > 9 * (n * q - s * s):
+                out.append((int(eid), key[0], int(x), n))
+        hist.append(int(x))
+        if len(hist) > 20:
+            hist.pop(0)
+    return (",".join(str(v) for v in hist),), out
+
+
+_anomaly_update = _fold_update(
+    _anomaly_fold, ANOMALY_STATE_SCHEMA, ANOMALY_OUTPUT_SCHEMA, ("",),
+    "append", order=("ts", "event_id"))
 
 
 def anomaly_tracker(events: DataFrame) -> DataFrame:
@@ -349,13 +407,7 @@ def anomaly_tracker(events: DataFrame) -> DataFrame:
     arithmetic, no floats, no approximation. State is ~20 ints per user
     regardless of stream length.
     """
-    return events.groupBy("user_id").applyInPandasWithState(
-        _anomaly_update,
-        outputStructType=ANOMALY_OUTPUT_SCHEMA,
-        stateStructType=ANOMALY_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _apply_fold(events, _anomaly_update, "user_id")
 
 
 EWMA_STATE_SCHEMA = StructType([StructField("hist", StringType())])
@@ -372,49 +424,30 @@ EWMA_OUTPUT_SCHEMA = StructType(
 _EWMA_WEIGHTS = (128, 64, 32, 16, 8, 4, 2, 1)  # most recent first
 
 
-def _ewma_update(
-    key: tuple,
-    batches: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
+def _ewma_fold(key, st, pdf):
     """Per-user trailing-8 deque; emits the same power-of-two integer
     EWMA numerator/denominator as the batch window_ewma query."""
-    (user_id,) = key
-    hist: list[int] = []
-    if state.exists:
-        (packed,) = state.get
-        if packed:
-            hist = [int(v) for v in packed.split(",")]
-    out_ids, out_num, out_den = [], [], []
-    # concat-then-sort-once: multi-chunk groups arrive in arbitrary
-    # chunk order and the deque walks event time (round-5 advisory)
-    chunks = [c for c in batches if len(c)]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event_id"])
-        cents_s = _cents_series(pdf["value"])
-        keep = cents_s.notna()  # NULL cents never enter the deque
-        for eid, x in zip(pdf.loc[keep, "event_id"].astype("int64"),
-                          cents_s[keep]):
-            hist.append(int(x))
-            if len(hist) > 8:
-                hist.pop(0)
-            num = den = 0
-            for w, v in zip(_EWMA_WEIGHTS, reversed(hist)):
-                num += w * v
-                den += w
-            out_ids.append(int(eid))
-            out_num.append(num)
-            out_den.append(den)
-    state.update((",".join(str(v) for v in hist),))
-    yield pd.DataFrame(
-        {
-            "event_id": out_ids,
-            "user_id": [user_id] * len(out_ids),
-            "ewma_num": out_num,
-            "ewma_den": out_den,
-        }
-    )
+    (packed,) = st
+    hist = [int(v) for v in packed.split(",")] if packed else []
+    out = []
+    cents_s = _cents_series(pdf["value"])
+    keep = cents_s.notna()  # NULL cents never enter the deque
+    for eid, x in zip(pdf.loc[keep, "event_id"].astype("int64"),
+                      cents_s[keep]):
+        hist.append(int(x))
+        if len(hist) > 8:
+            hist.pop(0)
+        num = den = 0
+        for w, v in zip(_EWMA_WEIGHTS, reversed(hist)):
+            num += w * v
+            den += w
+        out.append((int(eid), key[0], num, den))
+    return (",".join(str(v) for v in hist),), out
+
+
+_ewma_update = _fold_update(
+    _ewma_fold, EWMA_STATE_SCHEMA, EWMA_OUTPUT_SCHEMA, ("",), "append",
+    order=("ts", "event_id"))
 
 
 def ewma_tracker(events: DataFrame) -> DataFrame:
@@ -427,96 +460,7 @@ def ewma_tracker(events: DataFrame) -> DataFrame:
     renormalizes for short history exactly like the batch COALESCE
     ladder. State is <=8 ints per user regardless of stream length.
     """
-    return events.groupBy("user_id").applyInPandasWithState(
-        _ewma_update,
-        outputStructType=EWMA_OUTPUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas port (SURVEY §8 / VERDICT r3 #8)
-# ---------------------------------------------------------------------------
-
-def has_transform_with_state() -> bool:
-    """True when this PySpark can actually RUN the new arbitrary-state
-    API: the GroupedData method exists (SPARK-49564, present in 4.1.2)
-    AND the `protobuf` package is importable — the state-server protocol
-    (pyspark.sql.streaming.proto.StateMessage_pb2) imports
-    google.protobuf at query start, and pyspark does not declare it as a
-    hard dependency; without it the TransformWithStateInPySpark driver
-    worker crashes at plan time. This container ships no protobuf (and
-    installs are off-limits), so the port below is exercised the moment
-    the dependency appears — same carry pattern as delta/tshark
-    (SURVEY §6)."""
-    import importlib.util
-
-    from pyspark.sql import GroupedData
-
-    if not hasattr(GroupedData, "transformWithStateInPandas"):
-        return False
-    try:
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:  # no `google` namespace package at all
-        return False
-
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """`running_user_totals` ported to transformWithStateInPandas — the
-    successor API to applyInPandasWithState (typed state handles, timers,
-    composite ListState/MapState, initial-state bootstrap). Functionally
-    identical output for the NoTimeout path; tests assert equivalence
-    against both the applyInPandasWithState twin and the batch ground
-    truth (tests/test_streaming.py::test_tws_totals_match_legacy_state).
-
-    Port notes (why this is not a mechanical rename):
-    - state is a named handle (`getValueState`) fetched in init(), not a
-      positional tuple smuggled through GroupState;
-    - handleInputRows receives an ITERATOR of pandas frames per key per
-      batch and returns an iterator of frames;
-    - eviction is timer-driven (handleExpiredTimer) instead of
-      state.hasTimedOut, so the timeout live-lock footgun documented on
-      running_user_totals (availableNow never fires timeouts) has the
-      same shape under timeMode='processingTime' — keep timeMode='none'
-      for drain-style triggers.
-    """
-    from pyspark.sql.streaming import StatefulProcessor
-
-    class TotalsProcessor(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n_events LONG, sum_cents LONG"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            n, cents = (
-                self._totals.get() if self._totals.exists() else (0, 0)
-            )
-            for pdf in rows:
-                n += len(pdf)  # COUNT(*) counts NULL-value rows too
-                cents += int(_cents_series(pdf["value"]).fillna(0).sum())
-            self._totals.update((n, cents))
-            yield pd.DataFrame(
-                {"user_id": [user_id], "n_events": [n],
-                 "sum_cents": [cents], "expired": [False]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            TotalsProcessor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
+    return _apply_fold(events, _ewma_update, "user_id")
 
 
 # ---------------------------------------------------------------------------
@@ -547,53 +491,38 @@ SESSION_OUTPUT_SCHEMA = StructType(
 _GAP_US = 1800 * 1_000_000  # 30 minutes, integer microseconds
 
 
-def _session_update(
-    key: tuple,
-    batches: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
+def _session_fold(key, st, pdf):
     """Per-user open-session carry: close + emit a session when a >30-min
     gap arrives, keep the open one in state across micro-batches. Same
-    integer-microsecond gap rule as the batch twin."""
-    (user_id,) = key
-    sess_no, start_us, last_us, n, cents = (
-        state.get if state.exists else (0, 0, 0, 0, 0)
-    )
-    out: list[tuple] = []
+    integer-microsecond gap rule as the batch twin. The gap rule walks
+    event time; NaT rows are dropped by the harness (NaT would cast to
+    INT64_MIN and fabricate a session at the dawn of time)."""
+    sess_no, start_us, last_us, n, cents = st
+    out = []
+    ts_us = pdf["ts"].values.astype("datetime64[us]").astype("int64")
+    xs = _cents_series(pdf["value"]).fillna(0)  # SUM skips NULL cents
+    for t, x in zip(ts_us, xs):
+        if n > 0 and t - last_us > _GAP_US:
+            out.append((
+                key[0], sess_no,
+                pd.Timestamp(start_us, unit="us").strftime(
+                    "%Y-%m-%d %H:%M:%S"),
+                n, (last_us - start_us) // 1_000_000, cents,
+            ))
+            n, cents = 0, 0
+        if n == 0:
+            sess_no += 1
+            start_us = int(t)
+            cents = 0
+        n += 1
+        cents += int(x)
+        last_us = int(t)
+    return (sess_no, start_us, last_us, n, cents), out
 
-    def close():
-        out.append((
-            user_id, sess_no,
-            pd.Timestamp(start_us, unit="us").strftime("%Y-%m-%d %H:%M:%S"),
-            n, (last_us - start_us) // 1_000_000, cents,
-        ))
 
-    # concat-then-sort-once: the gap rule walks event time, so chunk
-    # order must not leak into session boundaries (round-5 advisory)
-    chunks = [c for c in batches if len(c)]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True)
-        # NaT would cast to INT64_MIN and fabricate a session at the
-        # dawn of time; a NULL-ts event has no place on the gap timeline
-        pdf = pdf[pdf["ts"].notna()]
-        pdf = pdf.sort_values(["ts", "event_id"])
-        ts_us = pdf["ts"].values.astype("datetime64[us]").astype("int64")
-        xs = _cents_series(pdf["value"]).fillna(0)  # SUM skips NULL cents
-        for t, x in zip(ts_us, xs):
-            if n > 0 and t - last_us > _GAP_US:
-                close()
-                n, cents = 0, 0
-            if n == 0:
-                sess_no += 1
-                start_us = int(t)
-                cents = 0
-            n += 1
-            cents += int(x)
-            last_us = int(t)
-    state.update((sess_no, start_us, last_us, n, cents))
-    yield pd.DataFrame(
-        out, columns=[f.name for f in SESSION_OUTPUT_SCHEMA.fields]
-    )
+_session_update = _fold_update(
+    _session_fold, SESSION_STATE_SCHEMA, SESSION_OUTPUT_SCHEMA,
+    (0, 0, 0, 0, 0), "append", order=("ts", "event_id"), dropna="ts")
 
 
 def session_tracker(events: DataFrame) -> DataFrame:
@@ -608,15 +537,8 @@ def session_tracker(events: DataFrame) -> DataFrame:
     is exactly what a production pipeline wants: sessions finalize on
     inactivity, the open tail is not yet a fact.
     """
-    return events.select("user_id", "event_id", "ts", "value").groupBy(
-        "user_id"
-    ).applyInPandasWithState(
-        _session_update,
-        outputStructType=SESSION_OUTPUT_SCHEMA,
-        stateStructType=SESSION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _apply_fold(events.select("user_id", "event_id", "ts", "value"),
+                       _session_update, "user_id")
 
 
 # ---------------------------------------------------------------------------
@@ -644,52 +566,43 @@ BEACON_OUTPUT_SCHEMA = StructType(
 )
 
 
-def _beacon_update(
-    key: tuple,
-    batches: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
+def _beacon_fold(key, st, pdf):
     """Constant state per key: (last event ts, and the three running sums
     n / S / Q of integer-second gaps). The regularity verdict re-derives
     the batch query's all-BIGINT inequality 100*(n*Q - S^2) < 9*S^2
-    each micro-batch, so the final emitted row equals the batch answer."""
-    user_id, event_type = key
-    last_ts, n, s, q = (state.get if state.exists else (-1, 0, 0, 0))
-    # concat-then-sort-once: gap statistics walk event time, so chunk
-    # order must not perturb the gaps (round-5 advisory)
-    chunks = [c for c in batches if len(c)]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True)
-        # NaT rows are dropped BEFORE the order guard below: NaT casts
-        # to INT64_MIN and would masquerade as an out-of-order event
-        # (and a negative gap would corrupt S/Q — the funnel NaT class).
-        pdf = pdf.dropna(subset=["ts"]).sort_values(["ts", "event_id"])
-        ts_us = pdf["ts"].values.astype("datetime64[us]").astype("int64")
-        if len(ts_us) and last_ts >= 0 and int(ts_us[0]) < last_ts:
-            # The loud ordering contract (ADVICE r10, made consistent in
-            # r13): an event older than the folded watermark would add a
-            # NEGATIVE gap to the running sums and permanently corrupt
-            # the regularity verdict — fail the stream instead.
-            raise ValueError(
-                f"beacon_tracker: event at {pd.Timestamp(ts_us[0], unit='us')}"
-                f" arrived after {pd.Timestamp(last_ts, unit='us')} was "
-                "already folded — events must be event-time-ordered per "
-                "key across micro-batches (late/out-of-order upstream "
-                "data)")
-        for t in ts_us:
-            if last_ts >= 0:
-                g = (int(t) - last_ts) // 1_000_000
-                n, s, q = n + 1, s + g, q + g * g
-            last_ts = int(t)
-    state.update((last_ts, n, s, q))
-    out: list[tuple] = []
+    each micro-batch, so the final emitted row equals the batch answer.
+    Gap statistics walk event time. NaT rows are dropped by the harness
+    BEFORE the order guard below: NaT casts to INT64_MIN and would
+    masquerade as an out-of-order event (and a negative gap would
+    corrupt S/Q — the funnel NaT class)."""
+    last_ts, n, s, q = st
+    ts_us = pdf["ts"].values.astype("datetime64[us]").astype("int64")
+    if len(ts_us) and last_ts >= 0 and int(ts_us[0]) < last_ts:
+        # The loud ordering contract (ADVICE r10, made consistent in
+        # r13): an event older than the folded watermark would add a
+        # NEGATIVE gap to the running sums and permanently corrupt
+        # the regularity verdict — fail the stream instead.
+        raise ValueError(
+            f"beacon_tracker: event at {pd.Timestamp(ts_us[0], unit='us')}"
+            f" arrived after {pd.Timestamp(last_ts, unit='us')} was "
+            "already folded — events must be event-time-ordered per "
+            "key across micro-batches (late/out-of-order upstream "
+            "data)")
+    for t in ts_us:
+        if last_ts >= 0:
+            g = (int(t) - last_ts) // 1_000_000
+            n, s, q = n + 1, s + g, q + g * g
+        last_ts = int(t)
+    out = []
     if n >= 3:
         var_num = n * q - s * s
-        out.append((user_id, event_type, n, s, var_num,
-                    100 * var_num < 9 * s * s))
-    yield pd.DataFrame(
-        out, columns=[f.name for f in BEACON_OUTPUT_SCHEMA.fields]
-    )
+        out.append((*key, n, s, var_num, 100 * var_num < 9 * s * s))
+    return (last_ts, n, s, q), out
+
+
+_beacon_update = _fold_update(
+    _beacon_fold, BEACON_STATE_SCHEMA, BEACON_OUTPUT_SCHEMA, (-1, 0, 0, 0),
+    order=("ts", "event_id"), dropna="ts")
 
 
 def beacon_tracker(events: DataFrame) -> DataFrame:
@@ -706,13 +619,7 @@ def beacon_tracker(events: DataFrame) -> DataFrame:
     negative gap to the running sums (r13); NaT timestamps are dropped
     like the batch window's NULL-ordering exclusion.
     """
-    return events.groupBy("user_id", "event_type").applyInPandasWithState(
-        _beacon_update,
-        outputStructType=BEACON_OUTPUT_SCHEMA,
-        stateStructType=BEACON_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _apply_fold(events, _beacon_update, "user_id", "event_type")
 
 
 # ---------------------------------------------------------------------------
@@ -731,35 +638,29 @@ DISTINCT_OUTPUT_SCHEMA = StructType(
 )
 
 
-def _distinct_update(
-    key: tuple,
-    batches: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
+def _distinct_fold(key, st, pdf):
     """Maintain the set of event types seen per user; emit the running
     distinct count after each micro-batch. State is the sorted CSV of
     seen types — bounded by the type vocabulary, not the stream length
     (swap to an HLL register block for unbounded vocabularies; the batch
     twin sketch_hll_distinct shows the estimator contract)."""
-    (user_id,) = key
+    (packed,) = st
     seen: set[str] = set()
-    if state.exists:
-        (packed,) = state.get
-        if packed:
-            # JSON list, not CSV: an event_type containing a comma used
-            # to split into phantom types on state restore, inflating
-            # the count across batches (r12 review). Legacy CSV states
-            # (no leading '[') restore best-effort the old way.
-            if packed.startswith("["):
-                seen.update(json.loads(packed))
-            else:
-                seen.update(packed.split(","))
-    for pdf in batches:
-        seen.update(pdf["event_type"].dropna().astype(str))
-    state.update((json.dumps(sorted(seen)),))
-    yield pd.DataFrame(
-        {"user_id": [user_id], "n_distinct_types": [len(seen)]}
-    )
+    if packed:
+        # JSON list, not CSV: an event_type containing a comma used
+        # to split into phantom types on state restore, inflating
+        # the count across batches (r12 review). Legacy CSV states
+        # (no leading '[') restore best-effort the old way.
+        if packed.startswith("["):
+            seen.update(json.loads(packed))
+        else:
+            seen.update(packed.split(","))
+    seen.update(pdf["event_type"].dropna().astype(str))
+    return (json.dumps(sorted(seen)),), [(key[0], len(seen))]
+
+
+_distinct_update = _fold_update(
+    _distinct_fold, DISTINCT_STATE_SCHEMA, DISTINCT_OUTPUT_SCHEMA, ("",))
 
 
 def distinct_type_tracker(events: DataFrame) -> DataFrame:
@@ -768,15 +669,8 @@ def distinct_type_tracker(events: DataFrame) -> DataFrame:
     over-window as first-occurrence flags). Here the state API holds the
     seen-set directly; output mode `update` re-emits a user's row only
     when their set can have changed (their group received rows)."""
-    return events.select("user_id", "event_type").groupBy(
-        "user_id"
-    ).applyInPandasWithState(
-        _distinct_update,
-        outputStructType=DISTINCT_OUTPUT_SCHEMA,
-        stateStructType=DISTINCT_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _apply_fold(events.select("user_id", "event_type"),
+                       _distinct_update, "user_id")
 
 
 LATENESS_STATE_SCHEMA = StructType([StructField("hw_us", LongType())])
@@ -791,50 +685,28 @@ LATENESS_OUTPUT_SCHEMA = StructType(
 )
 
 
-def _lateness_update(
-    key: tuple,
-    batches: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
+def _lateness_fold(key, st, pdf):
     """Per-user event-time high-water mark (ONE int64 of state); emits
     each event's lateness against it — the same arrival-order semantics
     as the batch event_watermark_lateness_audit (event_id = ingest
-    order, in-batch order re-sorted locally)."""
-    (user_id,) = key
-    hw = -1
-    if state.exists:
-        (hw,) = state.get
-        hw = int(hw)
-    ids, types, lates = [], [], []
-    # Concatenate ALL the group's chunks before sorting: a user whose
-    # micro-batch rows exceed the Arrow batch size arrives as multiple
-    # chunks in arbitrary order, and a per-chunk sort would compute the
-    # running high-water mark over a chunk-local arrival order — the
-    # batch audit this mirrors sorts globally per user.
-    chunks = [c for c in batches if len(c)]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True)
-        order = (["arrival_ord", "event_id"]
-                 if "arrival_ord" in pdf.columns else ["event_id"])
-        pdf = pdf.sort_values(order)
-        ts_us = pdf["ts"].astype("int64")  # tracker pre-normalizes to us
-        for eid, et, t in zip(
-            pdf["event_id"].astype("int64"), pdf["event_type"], ts_us
-        ):
-            t = int(t)
-            hw = t if t > hw else hw
-            ids.append(int(eid))
-            types.append(et)
-            lates.append(hw - t)
-    state.update((hw,))
-    yield pd.DataFrame(
-        {
-            "event_id": ids,
-            "user_id": [user_id] * len(ids),
-            "event_type": types,
-            "late_us": lates,
-        }
-    )
+    order). The harness sorts the whole group by (arrival_ord, event_id),
+    or by event_id alone when the source has no arrival_ord, as the
+    batch audit sorts globally per user."""
+    hw = int(st[0])
+    out = []
+    ts_us = pdf["ts"].astype("int64")  # tracker pre-normalizes to us
+    for eid, et, t in zip(
+        pdf["event_id"].astype("int64"), pdf["event_type"], ts_us
+    ):
+        t = int(t)
+        hw = t if t > hw else hw
+        out.append((int(eid), key[0], et, hw - t))
+    return (hw,), out
+
+
+_lateness_update = _fold_update(
+    _lateness_fold, LATENESS_STATE_SCHEMA, LATENESS_OUTPUT_SCHEMA, (-1,),
+    "append", order=("arrival_ord", "event_id"))
 
 
 def lateness_tracker(events: DataFrame) -> DataFrame:
@@ -860,13 +732,7 @@ def lateness_tracker(events: DataFrame) -> DataFrame:
         src = src.withColumn("ts", F.unix_micros(F.col("ts").cast("timestamp")))
     else:  # raw TIMESTAMP(NANOS) landed as bigint
         src = src.withColumn("ts", F.expr("ts div 1000"))
-    return src.groupBy("user_id").applyInPandasWithState(
-        _lateness_update,
-        outputStructType=LATENESS_OUTPUT_SCHEMA,
-        stateStructType=LATENESS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _apply_fold(src, _lateness_update, "user_id")
 
 
 HOLT_STATE_SCHEMA = StructType(
@@ -889,59 +755,41 @@ HOLT_OUTPUT_SCHEMA = StructType(
 )
 
 
-def _holt_update(
-    key: tuple,
-    batches: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
+def _holt_fold(key, st, days):
     """Per-type Holt linear smoothing state: (level, trend, n_days) —
-    three int64s. Each micro-batch's rows are concatenated (the
-    multi-chunk rule), aggregated to day totals, day-sorted, and folded
+    three int64s. Each micro-batch's rows are aggregated to day totals
+    (`_day_totals`, before the harness's day-order check) and folded
     with the SAME truncating-halving recurrence as the batch
     forecast_holt_linear; the updated state emits one forecast row.
     Contract: a day must arrive complete within one micro-batch (the
     availableNow / daily-trigger deployment — partial days would smooth
     a partial total; same caveat family as session_tracker), and days
     must arrive in order — ENFORCED via the state's last_day watermark:
-    a late or replayed day raises instead of smoothing twice (r13)."""
-    (event_type,) = key
-    level, trend, n_days, last_day = (
-        state.get if state.exists else (0, 0, 0, "")
-    )
-    level, trend, n_days = int(level), int(trend), int(n_days)
-    last_day = last_day or ""
+    a replayed day (the "complete day per micro-batch" contract broke)
+    raises instead of smoothing TWICE, an older day instead of smoothing
+    out of sequence (r13)."""
+    level, trend, n_days = (int(v) for v in st)
+    for y in days["cents"]:
+        y = int(y)
+        if n_days == 0:
+            level, trend = y, 0
+        else:
+            nl = _tdiv(y + level + trend, 2)
+            trend = _tdiv(trend + nl - level, 2)
+            level = nl
+        n_days += 1
+    return (level, trend, n_days), [
+        (key[0], n_days, level, trend, level + trend)]
 
-    chunks = [c for c in batches if len(c)]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True)
-        daily = (
-            pdf.groupby("d", sort=True)["cents"].sum().astype("int64")
-        )
-        for d_v, y in daily.items():
-            d = _day_str(d_v)
-            # A replayed day (== last_day) means the "complete day per
-            # micro-batch" contract broke and this total would smooth
-            # TWICE; an older day would smooth out of sequence.
-            _check_day_order("holt_tracker", d, last_day)
-            last_day = d
-            y = int(y)
-            if n_days == 0:
-                level, trend = y, 0
-            else:
-                nl = _tdiv(y + level + trend, 2)
-                trend = _tdiv(trend + nl - level, 2)
-                level = nl
-            n_days += 1
-    state.update((int(level), int(trend), int(n_days), last_day))
-    yield pd.DataFrame(
-        {
-            "event_type": [event_type],
-            "n_days": [n_days],
-            "level_cents": [level],
-            "trend_cents": [trend],
-            "forecast_1d": [level + trend],
-        }
-    )
+
+def _day_totals(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One row per day (sorted), cents summed — holt folds day totals."""
+    return pdf.groupby("d", sort=True, as_index=False)["cents"].sum()
+
+
+_holt_update = _fold_update(
+    _holt_fold, HOLT_STATE_SCHEMA, HOLT_OUTPUT_SCHEMA, (0, 0, 0, ""),
+    prep=_day_totals, daily="holt_tracker")
 
 
 def holt_tracker(events: DataFrame) -> DataFrame:
@@ -966,13 +814,7 @@ def holt_tracker(events: DataFrame) -> DataFrame:
         day.cast("string").alias("d"),
         F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
     )
-    return src.groupBy("event_type").applyInPandasWithState(
-        _holt_update,
-        outputStructType=HOLT_OUTPUT_SCHEMA,
-        stateStructType=HOLT_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _apply_fold(src, _holt_update, "event_type")
 
 
 # ---------------------------------------------------------------------------
@@ -998,62 +840,43 @@ KS_OUTPUT_SCHEMA = StructType(
 )
 
 
-def _ks_update(
-    key: tuple,
-    batches: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
+def _ks_fold(key, st, pdf):
     """State = the binned two-sample histogram (parallel int64 arrays:
     bin ids, click counts, purchase counts — bounded by the VALUE
     RANGE, not the stream length). Every micro-batch merges its bin
-    counts (all Arrow chunks concatenated first — the multi-chunk
-    rule) and re-derives the KS sup statistic with the batch query's
+    counts and re-derives the KS sup statistic with the batch query's
     exact integer cross-multiplied arithmetic, so the emitted d_num is
     bit-identical to running stats_ks_two_sample over everything seen
     so far."""
-    counts: dict[int, list[int]] = {}
-    if state.exists:
-        bins, a1, a2 = state.get
-        counts = {
-            int(b): [int(x), int(y)] for b, x, y in zip(bins, a1, a2)
-        }
-    chunks = [c for c in batches if len(c)]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True)
-        g = pdf.groupby("bin", sort=False)[["i1", "i2"]].sum()
-        for b, row in g.iterrows():
-            e = counts.setdefault(int(b), [0, 0])
-            e[0] += int(row["i1"])
-            e[1] += int(row["i2"])
+    counts = {int(b): [int(x), int(y)] for b, x, y in zip(*st)}
+    g = pdf.groupby("bin", sort=False)[["i1", "i2"]].sum()
+    for b, row in g.iterrows():
+        e = counts.setdefault(int(b), [0, 0])
+        e[0] += int(row["i1"])
+        e[1] += int(row["i2"])
     n1 = sum(v[0] for v in counts.values())
     n2 = sum(v[1] for v in counts.values())
     f1 = f2 = d_num = 0
-    for b in sorted(counts):
+    ordered = sorted(counts)
+    for b in ordered:
         f1 += counts[b][0]
         f2 += counts[b][1]
         d_num = max(d_num, abs(f1 * n2 - f2 * n1))
-    ordered = sorted(counts)
-    state.update(
-        (
-            [int(b) for b in ordered],
-            [counts[b][0] for b in ordered],
-            [counts[b][1] for b in ordered],
-        )
-    )
     # HALF_UP to mirror the batch query's F.round (Python round() is
     # banker's rounding and would differ at an exact half-ulp boundary).
     # Same tree as the JVM: IEEE double division first, then
     # Decimal(repr(x)) — repr is the shortest round-trip string, the
     # same value BigDecimal.valueOf(double) sees — quantized HALF_UP.
     ks_d = _round_half_up(d_num / (n1 * n2), 6) if n1 and n2 else 0.0
-    yield pd.DataFrame(
-        {
-            "n1": [n1],
-            "n2": [n2],
-            "d_num": [d_num],
-            "ks_d": [ks_d],
-        }
-    )
+    return (
+        [int(b) for b in ordered],
+        [counts[b][0] for b in ordered],
+        [counts[b][1] for b in ordered],
+    ), [(n1, n2, d_num, ks_d)]
+
+
+_ks_update = _fold_update(
+    _ks_fold, KS_STATE_SCHEMA, KS_OUTPUT_SCHEMA, ([], [], []))
 
 
 def ks_drift_tracker(events: DataFrame) -> DataFrame:
@@ -1080,13 +903,7 @@ def ks_drift_tracker(events: DataFrame) -> DataFrame:
         F.when(F.col("event_type") == "click", 1).otherwise(0).alias("i1"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("i2"),
     )
-    return src.groupBy("g").applyInPandasWithState(
-        _ks_update,
-        outputStructType=KS_OUTPUT_SCHEMA,
-        stateStructType=KS_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _apply_fold(src, _ks_update, "g")
 
 
 # ---------------------------------------------------------------------------
@@ -1112,11 +929,7 @@ DEDUP_OUTPUT_SCHEMA = StructType(
 )
 
 
-def _band_index_update(
-    key: tuple,
-    batches: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
+def _band_index_fold(key, st, pdf):
     """State per (band, bsig) bucket = the full 8-int signatures of every
     doc ever seen in this bucket. Each arriving doc is compared against
     every doc already in the bucket (earlier batches' members + docs
@@ -1126,39 +939,36 @@ def _band_index_update(
     (match_doc = smaller id) — streams don't arrive in id order, and
     orienting by arrival would miss every pair whose larger id arrived
     first; each unordered pair is compared exactly once per bucket, so
-    no pair double-emits within a band. Chunk-safe: concat all Arrow
-    chunks, sort ONCE by doc_id."""
-    members: list[tuple[int, tuple[int, ...]]] = []
-    if state.exists:
-        ids, flat = state.get
-        members = [
-            (int(d), tuple(int(x) for x in flat[8 * i: 8 * i + 8]))
-            for i, d in enumerate(ids)
-        ]
+    no pair double-emits within a band. The harness sorts the group
+    ONCE by doc_id."""
+    ids, flat = st
+    members = [
+        (int(d), tuple(int(x) for x in flat[8 * i: 8 * i + 8]))
+        for i, d in enumerate(ids)
+    ]
     out: list[tuple[int, int, int]] = []
-    chunks = [c for c in batches if len(c)]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True).sort_values("doc_id")
-        # hoisted ndarrays: per-row tuple assembly indexes numpy arrays,
-        # not ~8 pandas .iloc scalar dispatches per document (r13 —
-        # identical output, pinned by the band-index equivalence test)
-        sig_mat = [pdf[f"mh{j}"].to_numpy("int64") for j in range(8)]
-        doc_ids = pdf["doc_id"].to_numpy("int64")
-        for row_i in range(len(doc_ids)):
-            doc = int(doc_ids[row_i])
-            sig = tuple(int(c[row_i]) for c in sig_mat)
-            for prev_doc, prev_sig in members:
-                m = sum(1 for a, b in zip(sig, prev_sig) if a == b)
-                if m >= 4:
-                    out.append((max(doc, prev_doc), min(doc, prev_doc), m))
-            members.append((doc, sig))
-    state.update((
+    # hoisted ndarrays: per-row tuple assembly indexes numpy arrays,
+    # not ~8 pandas .iloc scalar dispatches per document (r13 —
+    # identical output, pinned by the band-index equivalence test)
+    sig_mat = [pdf[f"mh{j}"].to_numpy("int64") for j in range(8)]
+    doc_ids = pdf["doc_id"].to_numpy("int64")
+    for row_i in range(len(doc_ids)):
+        doc = int(doc_ids[row_i])
+        sig = tuple(int(c[row_i]) for c in sig_mat)
+        for prev_doc, prev_sig in members:
+            m = sum(1 for a, b in zip(sig, prev_sig) if a == b)
+            if m >= 4:
+                out.append((max(doc, prev_doc), min(doc, prev_doc), m))
+        members.append((doc, sig))
+    return (
         [d for d, _ in members],
         [x for _, s in members for x in s],
-    ))
-    yield pd.DataFrame(
-        out, columns=[f.name for f in DEDUP_OUTPUT_SCHEMA.fields]
-    )
+    ), out
+
+
+_band_index_update = _fold_update(
+    _band_index_fold, DEDUP_STATE_SCHEMA, DEDUP_OUTPUT_SCHEMA, ([], []),
+    "append", order=("doc_id",))
 
 
 def incremental_dedup_tracker(docs) -> DataFrame:
@@ -1200,13 +1010,7 @@ def incremental_dedup_tracker(docs) -> DataFrame:
             )
         ).alias("band", "bsig"),
     )
-    return bands.groupBy("band", "bsig").applyInPandasWithState(
-        _band_index_update,
-        outputStructType=DEDUP_OUTPUT_SCHEMA,
-        stateStructType=DEDUP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _apply_fold(bands, _band_index_update, "band", "bsig")
 
 
 # ---------------------------------------------------------------------------
@@ -1228,11 +1032,7 @@ HH_OUTPUT_SCHEMA = StructType(
 )
 
 
-def _spacesaving_update(
-    key: tuple,
-    batches: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
+def _spacesaving_fold(key, st, pdf):
     """SpaceSaving (Metwally et al. 2005) over this shard's key stream:
     a monitor of at most HH_CAPACITY (key, est, err) entries. A hit
     increments est; a miss over capacity EVICTS the minimum-est entry
@@ -1248,18 +1048,14 @@ def _spacesaving_update(
     key order, so Arrow chunking and shuffle order cannot change the
     monitor.
     """
-    (shard,) = key
+    (csv,) = st
     monitor: dict[int, list[int]] = {}
-    if state.exists:
-        (csv,) = state.get
-        if csv:
-            for ent in csv.split(";"):
-                u, e_, r_ = ent.split(":")
-                monitor[int(u)] = [int(e_), int(r_)]
-    counts: dict[int, int] = {}
-    for pdf in batches:
-        for u, c in pdf["user_id"].value_counts().items():
-            counts[int(u)] = counts.get(int(u), 0) + int(c)
+    if csv:
+        for ent in csv.split(";"):
+            u, e_, r_ = ent.split(":")
+            monitor[int(u)] = [int(e_), int(r_)]
+    counts = {int(u): int(c)
+              for u, c in pdf["user_id"].value_counts().items()}
     for u in sorted(counts):
         c = counts[u]
         if u in monitor:
@@ -1271,19 +1067,13 @@ def _spacesaving_update(
             vest = monitor[victim][0]
             del monitor[victim]
             monitor[u] = [vest + c, vest]
-    state.update((
-        ";".join(f"{u}:{e}:{r}"
-                 for u, (e, r) in sorted(monitor.items())),
-    ))
-    users = sorted(monitor)
-    yield pd.DataFrame(
-        {
-            "shard": [shard] * len(users),
-            "user_id": users,
-            "est": [monitor[u][0] for u in users],
-            "err": [monitor[u][1] for u in users],
-        }
-    )
+    return (
+        ";".join(f"{u}:{e}:{r}" for u, (e, r) in sorted(monitor.items())),
+    ), [(key[0], u, e, r) for u, (e, r) in sorted(monitor.items())]
+
+
+_spacesaving_update = _fold_update(
+    _spacesaving_fold, HH_STATE_SCHEMA, HH_OUTPUT_SCHEMA, ("",))
 
 
 def heavy_hitter_tracker(events: DataFrame) -> DataFrame:
@@ -1310,13 +1100,7 @@ def heavy_hitter_tracker(events: DataFrame) -> DataFrame:
         .cast("bigint").alias("shard"),
         "user_id",
     )
-    return keyed.groupBy("shard").applyInPandasWithState(
-        _spacesaving_update,
-        outputStructType=HH_OUTPUT_SCHEMA,
-        stateStructType=HH_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _apply_fold(keyed, _spacesaving_update, "shard")
 
 
 # ---------------------------------------------------------------------------
@@ -1347,39 +1131,31 @@ BRIER_OUTPUT_SCHEMA = StructType(
 )
 
 
-def _brier_update(
-    key: tuple,
-    batches: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
+def _brier_fold(key, st, pdf):
     """Constant state per bin: (n, n_pos, sum_p_bp, sq_err_num) — all
     exact int64 in basis points (p_bp in [0, 10000], outcome scaled to
     y*10000), so the accumulation is order-free: chunk order, batch
     order, and replay order cannot perturb integer sums. The emitted
     doubles divide the exact integers once per emission with Spark
     F.round parity (_round_half_up)."""
-    (bin_id,) = key
-    n, n_pos, sum_p, sq = (state.get if state.exists else (0, 0, 0, 0))
-    for chunk in batches:
-        if not len(chunk):
-            continue
-        p = chunk["p_bp"].values.astype("int64")
-        y = chunk["y"].values.astype("int64")
-        n += len(chunk)
-        n_pos += int(y.sum())
-        sum_p += int(p.sum())
-        d = p - y * 10000
-        sq += int((d * d).sum())
-    state.update((n, n_pos, sum_p, sq))
-    yield pd.DataFrame(
-        [(
-            bin_id, n, n_pos, sum_p, sq,
-            _round_half_up(sum_p / (n * 10000), 4),
-            _round_half_up(n_pos / n, 4),
-            _round_half_up(sq / (n * 10000 * 10000), 6),
-        )],
-        columns=[f.name for f in BRIER_OUTPUT_SCHEMA.fields],
-    )
+    n, n_pos, sum_p, sq = st
+    p = pdf["p_bp"].values.astype("int64")
+    y = pdf["y"].values.astype("int64")
+    n += len(pdf)
+    n_pos += int(y.sum())
+    sum_p += int(p.sum())
+    d = p - y * 10000
+    sq += int((d * d).sum())
+    return (n, n_pos, sum_p, sq), [(
+        key[0], n, n_pos, sum_p, sq,
+        _round_half_up(sum_p / (n * 10000), 4),
+        _round_half_up(n_pos / n, 4),
+        _round_half_up(sq / (n * 10000 * 10000), 6),
+    )]
+
+
+_brier_update = _fold_update(
+    _brier_fold, BRIER_STATE_SCHEMA, BRIER_OUTPUT_SCHEMA, (0, 0, 0, 0))
 
 
 def brier_calibration_tracker(scored: DataFrame) -> DataFrame:
@@ -1414,13 +1190,7 @@ def brier_calibration_tracker(scored: DataFrame) -> DataFrame:
         F.col("p_bp").cast("bigint").alias("p_bp"),
         F.col("y").cast("bigint").alias("y"),
     )
-    return binned.groupBy("bin").applyInPandasWithState(
-        _brier_update,
-        outputStructType=BRIER_OUTPUT_SCHEMA,
-        stateStructType=BRIER_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _apply_fold(binned, _brier_update, "bin")
 
 
 # ---------------------------------------------------------------------------
@@ -1453,50 +1223,39 @@ CUSUM_OUTPUT_SCHEMA = StructType(
 )
 
 
-def _cusum_update(
-    key: tuple,
-    batches: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
+def _cusum_fold(key, st, days):
     """Replays stats_cusum_drift's integer recurrence across
     micro-batches: 7-day warmup sets mu, then one-sided sums with 5%
-    slack and an h = mu//4 alarm. concat-then-sort-once per batch (the
-    beacon-tracker discipline) so Arrow chunking cannot reorder days;
-    cross-batch the day-ordered delivery of CLOSED daily totals is
-    ENFORCED via the state's last_day watermark — a late or replayed
-    day raises instead of silently corrupting the recurrence (r13,
-    the kendall loud-contract rule made consistent)."""
-    (event_type,) = key
-    n, warm, mu, sp, sn, mp, mn, alarm, last_day = (
-        state.get if state.exists else (0, 0, 0, 0, 0, 0, 0, -1, ""))
-    last_day = last_day or ""
-    chunks = [c for c in batches if len(c)]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True).sort_values("d")
-        for d_v, cents in zip(pdf["d"], pdf["cents"].astype("int64")):
-            d = _day_str(d_v)
-            _check_day_order("cusum_tracker", d, last_day)
-            last_day = d
-            c = int(cents)
-            if n < 6:
-                n, warm = n + 1, warm + c
-            elif n == 6:
-                n, warm = 7, warm + c
-                mu = _tdiv(warm, 7)
-            else:
-                k = _tdiv(mu, 20)
-                h = _tdiv(mu, 4)
-                sp = max(0, sp + c - mu - k)
-                sn = max(0, sn + mu - k - c)
-                mp, mn = max(mp, sp), max(mn, sn)
-                if alarm < 0 and (sp > h or sn > h):
-                    alarm = n + 1
-                n += 1
-    state.update((n, warm, mu, sp, sn, mp, mn, alarm, last_day))
-    yield pd.DataFrame(
-        [(event_type, n, mu, mp, mn, alarm)],
-        columns=[f.name for f in CUSUM_OUTPUT_SCHEMA.fields],
-    )
+    slack and an h = mu//4 alarm. The harness sorts each batch by day
+    so Arrow chunking cannot reorder days; cross-batch the day-ordered
+    delivery of CLOSED daily totals is ENFORCED via the state's last_day
+    watermark — a late or replayed day raises instead of silently
+    corrupting the recurrence (r13, the kendall loud-contract rule made
+    consistent)."""
+    n, warm, mu, sp, sn, mp, mn, alarm = st
+    for cents in days["cents"].astype("int64"):
+        c = int(cents)
+        if n < 6:
+            n, warm = n + 1, warm + c
+        elif n == 6:
+            n, warm = 7, warm + c
+            mu = _tdiv(warm, 7)
+        else:
+            k = _tdiv(mu, 20)
+            h = _tdiv(mu, 4)
+            sp = max(0, sp + c - mu - k)
+            sn = max(0, sn + mu - k - c)
+            mp, mn = max(mp, sp), max(mn, sn)
+            if alarm < 0 and (sp > h or sn > h):
+                alarm = n + 1
+            n += 1
+    return (n, warm, mu, sp, sn, mp, mn, alarm), [
+        (key[0], n, mu, mp, mn, alarm)]
+
+
+_cusum_update = _fold_update(
+    _cusum_fold, CUSUM_STATE_SCHEMA, CUSUM_OUTPUT_SCHEMA,
+    (0, 0, 0, 0, 0, 0, 0, -1, ""), order=("d",), daily="cusum_tracker")
 
 
 def cusum_tracker(daily: DataFrame) -> DataFrame:
@@ -1523,13 +1282,7 @@ def cusum_tracker(daily: DataFrame) -> DataFrame:
     are non-negative here, but the twin must not silently diverge on a
     hypothetical negative series).
     """
-    return daily.groupBy("event_type").applyInPandasWithState(
-        _cusum_update,
-        outputStructType=CUSUM_OUTPUT_SCHEMA,
-        stateStructType=CUSUM_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _apply_fold(daily, _cusum_update, "event_type")
 
 
 # ---------------------------------------------------------------------------
@@ -1553,29 +1306,22 @@ SRM_OUTPUT_SCHEMA = StructType(
 )
 
 
-def _srm_update(
-    key: tuple,
-    batches: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
+def _srm_fold(key, st, pdf):
     """Two exact int64 arm counters; per emission the 1-dof chi-square
     against 50/50 with the same IEEE tree as the batch query (half as
     a double, squares divided once) and the exact 3.841 literal."""
-    n0, n1 = (state.get if state.exists else (0, 0))
-    for chunk in batches:
-        if not len(chunk):
-            continue
-        a = chunk["is_treatment"].values.astype("int64")
-        n1 += int(a.sum())
-        n0 += len(chunk) - int(a.sum())
-    state.update((n0, n1))
+    n0, n1 = st
+    a = pdf["is_treatment"].values.astype("int64")
+    n1 += int(a.sum())
+    n0 += len(pdf) - int(a.sum())
     half = (n0 + n1) / 2.0
     chi2 = ((n0 - half) * (n0 - half) / half
             + (n1 - half) * (n1 - half) / half) if (n0 + n1) else 0.0
-    yield pd.DataFrame(
-        [(n0, n1, _round_half_up(chi2, 4), chi2 > 3.841)],
-        columns=[f.name for f in SRM_OUTPUT_SCHEMA.fields],
-    )
+    return (n0, n1), [(n0, n1, _round_half_up(chi2, 4), chi2 > 3.841)]
+
+
+_srm_update = _fold_update(
+    _srm_fold, SRM_STATE_SCHEMA, SRM_OUTPUT_SCHEMA, (0, 0))
 
 
 def srm_tracker(users: DataFrame) -> DataFrame:
@@ -1605,13 +1351,7 @@ def srm_tracker(users: DataFrame) -> DataFrame:
             "CAST(user_id AS STRING))), 1, 15), 16, 10) AS BIGINT)"
         ) % 2 != 0).cast("int").alias("is_treatment"),
     )
-    return src.groupBy("g").applyInPandasWithState(
-        _srm_update,
-        outputStructType=SRM_OUTPUT_SCHEMA,
-        stateStructType=SRM_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _apply_fold(src, _srm_update, "g")
 
 
 # ---------------------------------------------------------------------------
@@ -1642,11 +1382,7 @@ ACF_OUTPUT_SCHEMA = StructType(
 )
 
 
-def _acf_update(
-    key: tuple,
-    batches: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
+def _acf_fold(key, st, days):
     """Bounded ACF state: (n, S, SS), the first and last ACF_MAX_LAG
     values, and the lagged product sums P_k = sum(x_{t-k} * x_t). The
     batch statistic's mean-cleared integer form expands EXACTLY from
@@ -1657,39 +1393,24 @@ def _acf_update(
 
     with A_k = S - sum(last k values), B_k = S - sum(first k values) —
     so the emitted ACF equals stats_acf_daily_lags bit-for-bit without
-    ever storing the series. concat-then-sort-once per batch (day
-    order); cross-batch the day-ordered delivery of closed daily counts
-    is ENFORCED via the state's last_day watermark — a late or replayed
-    day raises instead of silently corrupting the lagged sums (r13)."""
-    if state.exists:
-        n, s, ss, firsts_csv, lasts_csv, last_day, *ps = state.get
-        firsts = [int(v) for v in firsts_csv.split(",") if v]
-        lasts = [int(v) for v in lasts_csv.split(",") if v]
-        last_day = last_day or ""
-        ps = list(ps)
-    else:
-        n, s, ss, firsts, lasts, last_day = 0, 0, 0, [], [], ""
-        ps = [0] * ACF_MAX_LAG
-    chunks = [c for c in batches if len(c)]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True).sort_values("d")
-        for d_v, x in zip(pdf["d"], pdf["x"].astype("int64")):
-            d = _day_str(d_v)
-            _check_day_order("acf_tracker", d, last_day)
-            last_day = d
-            x = int(x)
-            for k in range(1, ACF_MAX_LAG + 1):
-                if len(lasts) >= k:
-                    ps[k - 1] += lasts[-k] * x
-            if len(firsts) < ACF_MAX_LAG:
-                firsts.append(x)
-            lasts.append(x)
-            if len(lasts) > ACF_MAX_LAG:
-                lasts.pop(0)
-            n, s, ss = n + 1, s + x, ss + x * x
-    state.update((n, s, ss,
-                  ",".join(str(v) for v in firsts),
-                  ",".join(str(v) for v in lasts), last_day, *ps))
+    ever storing the series. Days fold in day order; cross-batch the
+    day-ordered delivery of closed daily counts is ENFORCED via the
+    state's last_day watermark — a late or replayed day raises instead
+    of silently corrupting the lagged sums (r13)."""
+    n, s, ss, firsts_csv, lasts_csv, *ps = st
+    firsts = [int(v) for v in firsts_csv.split(",") if v]
+    lasts = [int(v) for v in lasts_csv.split(",") if v]
+    for x in days["x"].astype("int64"):
+        x = int(x)
+        for k in range(1, ACF_MAX_LAG + 1):
+            if len(lasts) >= k:
+                ps[k - 1] += lasts[-k] * x
+        if len(firsts) < ACF_MAX_LAG:
+            firsts.append(x)
+        lasts.append(x)
+        if len(lasts) > ACF_MAX_LAG:
+            lasts.pop(0)
+        n, s, ss = n + 1, s + x, ss + x * x
     out: list[tuple] = []
     den = n * n * ss - n * s * s
     for k in range(1, ACF_MAX_LAG + 1):
@@ -1699,8 +1420,14 @@ def _acf_update(
             num = (n * n * ps[k - 1] - n * s * (a_k + b_k)
                    + (n - k) * s * s)
             out.append((k, n - k, _round_half_up(num / den, 4)))
-    yield pd.DataFrame(
-        out, columns=[f.name for f in ACF_OUTPUT_SCHEMA.fields])
+    return (n, s, ss, ",".join(str(v) for v in firsts),
+            ",".join(str(v) for v in lasts), *ps), out
+
+
+_acf_update = _fold_update(
+    _acf_fold, ACF_STATE_SCHEMA, ACF_OUTPUT_SCHEMA,
+    (0, 0, 0, "", "", "") + (0,) * ACF_MAX_LAG, order=("d",),
+    daily="acf_tracker")
 
 
 def acf_tracker(daily: DataFrame) -> DataFrame:
@@ -1721,13 +1448,7 @@ def acf_tracker(daily: DataFrame) -> DataFrame:
 
     src = daily.select(F.lit(0).alias("g"), "d",
                        F.col("x").cast("bigint").alias("x"))
-    return src.groupBy("g").applyInPandasWithState(
-        _acf_update,
-        outputStructType=ACF_OUTPUT_SCHEMA,
-        stateStructType=ACF_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _apply_fold(src, _acf_update, "g")
 
 
 # ---------------------------------------------------------------------------
@@ -1754,11 +1475,7 @@ BENFORD_OUTPUT_SCHEMA = StructType(
 )
 
 
-def _benford_update(
-    key: tuple,
-    batches: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
+def _benford_fold(key, st, pdf):
     """Twelve exact int64 counters as the ENTIRE state: nine first-digit
     counters plus zero/negative/NULL guards (ADVICE r10 — cents==0 used
     to increment digit 9 via counts[int('0')-1] == counts[-1], negative
@@ -1773,20 +1490,16 @@ def _benford_update(
     this twin mirrors all of that exactly."""
     from wireduck_spark.operators.quality import _BENFORD_P
 
-    counts = list(state.get) if state.exists else [0] * 12
-    for chunk in batches:
-        if not len(chunk):
-            continue
-        cents = chunk["cents"]
-        null_mask = cents.isna()
-        counts[11] += int(null_mask.sum())
-        valid = cents[~null_mask]
-        counts[9] += int((valid == 0).sum())
-        counts[10] += int((valid < 0).sum())
-        first = valid[valid > 0].astype("int64").astype(str).str[0]
-        for digit, c in first.value_counts().items():
-            counts[int(digit) - 1] += int(c)
-    state.update(tuple(counts))
+    counts = list(st)
+    cents = pdf["cents"]
+    null_mask = cents.isna()
+    counts[11] += int(null_mask.sum())
+    valid = cents[~null_mask]
+    counts[9] += int((valid == 0).sum())
+    counts[10] += int((valid < 0).sum())
+    first = valid[valid > 0].astype("int64").astype(str).str[0]
+    for digit, c in first.value_counts().items():
+        counts[int(digit) - 1] += int(c)
     n = sum(counts)  # the batch scalar n spans ALL groups, incl. '0'/'-'/NULL
     out = []
     for i, c in enumerate(counts[:9]):
@@ -1802,8 +1515,11 @@ def _benford_update(
     for label, c in (("0", counts[9]), ("-", counts[10]), (None, counts[11])):
         if c:
             out.append((label, c, None, None))
-    yield pd.DataFrame(
-        out, columns=[f.name for f in BENFORD_OUTPUT_SCHEMA.fields])
+    return tuple(counts), out
+
+
+_benford_update = _fold_update(
+    _benford_fold, BENFORD_STATE_SCHEMA, BENFORD_OUTPUT_SCHEMA, (0,) * 12)
 
 
 def benford_tracker(amounts: DataFrame) -> DataFrame:
@@ -1828,13 +1544,7 @@ def benford_tracker(amounts: DataFrame) -> DataFrame:
 
     src = amounts.select(F.lit(0).alias("g"),
                          F.col("cents").cast("bigint").alias("cents"))
-    return src.groupBy("g").applyInPandasWithState(
-        _benford_update,
-        outputStructType=BENFORD_OUTPUT_SCHEMA,
-        stateStructType=BENFORD_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _apply_fold(src, _benford_update, "g")
 
 
 # ---------------------------------------------------------------------------
@@ -1870,11 +1580,7 @@ GRANGER_OUTPUT_SCHEMA = StructType(
 )
 
 
-def _granger_update(
-    key: tuple,
-    batches: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
+def _granger_fold(key, st, days):
     """Thirteen-value bounded state: yesterday's (x, y) plus the ten raw
     int64 lag-pair moments. Each closed day extends the moments by ONE
     observation (u=prev_y, v=prev_x, yt=y); the emission re-runs the
@@ -1884,21 +1590,9 @@ def _granger_update(
     closed daily rows ENFORCED via the state's last_day watermark — a
     late or replayed day raises instead of silently extending the
     moments with a mis-lagged pair (r13)."""
-    if state.exists:
-        (has_prev, px, py, m, su, sv, sy,
-         suu, svv, syy, suv, suy, svy, last_day) = state.get
-        last_day = last_day or ""
-    else:
-        has_prev, px, py, last_day = False, 0, 0, ""
-        m = su = sv = sy = suu = svv = syy = suv = suy = svy = 0
-    chunks = [c for c in batches if len(c)]
-    days = (pd.concat(chunks, ignore_index=True).sort_values("d")
-            if chunks else pd.DataFrame(columns=["d", "x", "y"]))
-    for _, row in days.iterrows():
-        d = _day_str(row["d"])
-        _check_day_order("granger_tracker", d, last_day)
-        last_day = d
-        x, y = int(row["x"]), int(row["y"])
+    has_prev, px, py, m, su, sv, sy, suu, svv, syy, suv, suy, svy = st
+    for x, y in zip(days["x"], days["y"]):
+        x, y = int(x), int(y)
         if has_prev:
             u, v, yt = py, px, y
             m += 1
@@ -1906,12 +1600,9 @@ def _granger_update(
             suu += u * u; svv += v * v; syy += yt * yt
             suv += u * v; suy += u * yt; svy += v * yt
         has_prev, px, py = True, x, y
-    state.update((has_prev, px, py, m, su, sv, sy,
-                  suu, svv, syy, suv, suy, svy, last_day))
+    st = (has_prev, px, py, m, su, sv, sy, suu, svv, syy, suv, suy, svy)
     if m < 4:
-        yield pd.DataFrame(
-            [], columns=[f.name for f in GRANGER_OUTPUT_SCHEMA.fields])
-        return
+        return st, []
     # numpy float64 divisions follow IEEE 754 (x/0 -> inf/nan) exactly
     # like Spark's double arithmetic in the batch twin — plain Python
     # floats RAISE ZeroDivisionError instead, so a constant lagged
@@ -1934,10 +1625,13 @@ def _granger_update(
         sse_rest = myy - muy * muy / muu
         f = float((sse_rest - sse_full) / (sse_full / _np.float64(m - 3)))
         ratio = float(sse_full / sse_rest)
-    yield pd.DataFrame(
-        [(m, _round_half_up(b2, 6), _round_half_up(f, 4),
-          _round_half_up(ratio, 4))],
-        columns=[f.name for f in GRANGER_OUTPUT_SCHEMA.fields])
+    return st, [(m, _round_half_up(b2, 6), _round_half_up(f, 4),
+                 _round_half_up(ratio, 4))]
+
+
+_granger_update = _fold_update(
+    _granger_fold, GRANGER_STATE_SCHEMA, GRANGER_OUTPUT_SCHEMA,
+    (False,) + (0,) * 12 + ("",), order=("d",), daily="granger_tracker")
 
 
 def granger_tracker(daily: DataFrame) -> DataFrame:
@@ -1955,13 +1649,7 @@ def granger_tracker(daily: DataFrame) -> DataFrame:
     src = daily.select(F.lit(0).alias("g"), "d",
                        F.col("x").cast("bigint").alias("x"),
                        F.col("y").cast("bigint").alias("y"))
-    return src.groupBy("g").applyInPandasWithState(
-        _granger_update,
-        outputStructType=GRANGER_OUTPUT_SCHEMA,
-        stateStructType=GRANGER_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _apply_fold(src, _granger_update, "g")
 
 
 # ---------------------------------------------------------------------------
@@ -1996,42 +1684,24 @@ KENDALL_OUTPUT_SCHEMA = StructType(
 )
 
 
-def _kendall_update(
-    key: tuple,
-    batches: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
+def _kendall_fold(key, st, days):
     """Five int64 pair counters plus a <=7-day current-week buffer as the
     ENTIRE state: the week-blocked pair space means a new day only ever
     pairs against the days already seen in ITS OWN calendar week, so the
     buffer resets at each week boundary and the counters match the batch
     equi-join exactly. tau-b re-renders per emission with the batch
-    query's sqrt tree and HALF_UP rounding."""
-    import math
-
-    if state.exists:
-        conc, disc, tx, ty, n_pairs, cur_w, buf_csv, last_day = state.get
-        buf = [tuple(int(v) for v in p.split(":"))
-               for p in buf_csv.split(";") if p]
-        last_day = last_day or ""
-    else:
-        conc = disc = tx = ty = n_pairs = 0
-        cur_w, buf, last_day = -1, [], ""
-    chunks = [c for c in batches if len(c)]
-    days = (pd.concat(chunks, ignore_index=True).sort_values("d")
-            if chunks else pd.DataFrame(columns=["d", "x", "y"]))
-    for _, row in days.iterrows():
-        d = pd.Timestamp(row["d"]).date()
-        x, y = int(row["x"]), int(row["y"])
-        # Loud, not silently wrong (ADVICE r10, widened r13): the
-        # strictly-increasing day watermark subsumes the original
-        # prior-week check AND catches a replayed or out-of-order day
-        # WITHIN the current week, which would pair against the wrong
-        # buffer (or its own earlier copy) and permanently corrupt the
-        # int64 counters.
-        _check_day_order("kendall_tracker", d.isoformat(), last_day)
-        last_day = d.isoformat()
-        w = (d - KENDALL_ANCHOR).days // 7
+    query's sqrt tree and HALF_UP rounding. Loud, not silently wrong
+    (ADVICE r10, widened r13): the harness's strictly-increasing day
+    watermark subsumes the original prior-week check AND catches a
+    replayed or out-of-order day WITHIN the current week, which would
+    pair against the wrong buffer (or its own earlier copy) and
+    permanently corrupt the int64 counters."""
+    conc, disc, tx, ty, n_pairs, cur_w, buf_csv = st
+    buf = [tuple(int(v) for v in p.split(":"))
+           for p in buf_csv.split(";") if p]
+    for d, x, y in zip(days["d"], days["x"], days["y"]):
+        x, y = int(x), int(y)
+        w = (pd.Timestamp(d).date() - KENDALL_ANCHOR).days // 7
         if w != cur_w:
             cur_w, buf = w, []
         for xa, ya in buf:
@@ -2042,17 +1712,18 @@ def _kendall_update(
             ty += y == ya
             n_pairs += 1
         buf.append((x, y))
-    state.update((conc, disc, tx, ty, n_pairs, cur_w,
-                  ";".join(f"{x}:{y}" for x, y in buf), last_day))
+    st = (conc, disc, tx, ty, n_pairs, cur_w,
+          ";".join(f"{x}:{y}" for x, y in buf))
     denom = float((n_pairs - tx) * (n_pairs - ty))
     if n_pairs == 0 or denom <= 0:
-        yield pd.DataFrame(
-            [], columns=[f.name for f in KENDALL_OUTPUT_SCHEMA.fields])
-        return
+        return st, []
     tau = float(conc - disc) / math.sqrt(denom)
-    yield pd.DataFrame(
-        [(n_pairs, conc, disc, tx, ty, _round_half_up(tau, 4))],
-        columns=[f.name for f in KENDALL_OUTPUT_SCHEMA.fields])
+    return st, [(n_pairs, conc, disc, tx, ty, _round_half_up(tau, 4))]
+
+
+_kendall_update = _fold_update(
+    _kendall_fold, KENDALL_STATE_SCHEMA, KENDALL_OUTPUT_SCHEMA,
+    (0, 0, 0, 0, 0, -1, "", ""), order=("d",), daily="kendall_tracker")
 
 
 def kendall_tracker(daily: DataFrame) -> DataFrame:
@@ -2070,13 +1741,7 @@ def kendall_tracker(daily: DataFrame) -> DataFrame:
     src = daily.select(F.lit(0).alias("g"), "d",
                        F.col("x").cast("bigint").alias("x"),
                        F.col("y").cast("bigint").alias("y"))
-    return src.groupBy("g").applyInPandasWithState(
-        _kendall_update,
-        outputStructType=KENDALL_OUTPUT_SCHEMA,
-        stateStructType=KENDALL_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _apply_fold(src, _kendall_update, "g")
 
 
 # ---------------------------------------------------------------------------
@@ -2115,11 +1780,7 @@ def _mk_block_term(t: int) -> int:
     return t * (t - 1) * (2 * t + 5)
 
 
-def _trend_duo_update(
-    key: tuple,
-    batches: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
+def _trend_duo_fold(key, st, days):
     """Mann-Kendall + Theil-Sen in one pass over the closed daily stream.
 
     MK side is fully bounded — the kendall_tracker device: pairs only
@@ -2141,33 +1802,18 @@ def _trend_duo_update(
 
     Day-ordered closed daily rows ENFORCED via the state's last_day
     watermark (r13 — widened from the ADVICE-r10 prior-week raise):
-    a late, replayed, or same-week out-of-order day fails loudly."""
-    import math
-
-    if state.exists:
-        (s_stat, closed_t1, closed_t2, n_days, cur_w,
-         buf_csv, slopes_csv, last_day) = state.get
-        buf = [tuple(int(v) for v in p.split(":"))
-               for p in buf_csv.split(";") if p]
-        slopes = [tuple(int(v) for v in p.split(":"))
-                  for p in slopes_csv.split(";") if p]
-        last_day = last_day or ""
-    else:
-        s_stat = closed_t1 = closed_t2 = n_days = 0
-        cur_w, buf, slopes, last_day = -1, [], [], ""
-    chunks = [c for c in batches if len(c)]
-    days = (pd.concat(chunks, ignore_index=True).sort_values("d")
-            if chunks else pd.DataFrame(columns=["d", "y"]))
-    for _, row in days.iterrows():
-        d = pd.Timestamp(row["d"]).date()
-        y = int(row["y"])
-        dayord = (d - KENDALL_ANCHOR).days
+    a late, replayed, or same-week out-of-order day fails loudly; a
+    same-week replay would add a phantom 0/0 slope and a self-tie to
+    the S statistic."""
+    s_stat, closed_t1, closed_t2, n_days, cur_w, buf_csv, slopes_csv = st
+    buf = [tuple(int(v) for v in p.split(":"))
+           for p in buf_csv.split(";") if p]
+    slopes = [tuple(int(v) for v in p.split(":"))
+              for p in slopes_csv.split(";") if p]
+    for d, y in zip(days["d"], days["y"]):
+        y = int(y)
+        dayord = (pd.Timestamp(d).date() - KENDALL_ANCHOR).days
         w = dayord // 7
-        # strictly-increasing day watermark (r13): subsumes the original
-        # prior-week raise and catches same-week replays, which would
-        # add a phantom 0/0 slope and a self-tie to the S statistic
-        _check_day_order("trend_duo_tracker", d.isoformat(), last_day)
-        last_day = d.isoformat()
         if w != cur_w:
             if buf:  # freeze the closing week's variance terms
                 closed_t1 += _mk_block_term(len(buf))
@@ -2181,9 +1827,9 @@ def _trend_duo_update(
             slopes.append((y - ya, dayord - da))
         buf.append((dayord, y))
         n_days += 1
-    state.update((s_stat, closed_t1, closed_t2, n_days, cur_w,
-                  ";".join(f"{a}:{b}" for a, b in buf),
-                  ";".join(f"{a}:{b}" for a, b in slopes), last_day))
+    st = (s_stat, closed_t1, closed_t2, n_days, cur_w,
+          ";".join(f"{a}:{b}" for a, b in buf),
+          ";".join(f"{a}:{b}" for a, b in slopes))
     # Open week's variance terms, re-derived from the buffer.
     t1 = closed_t1 + _mk_block_term(len(buf))
     ys = {}
@@ -2207,10 +1853,14 @@ def _trend_duo_update(
         med_out, down = _round_half_up(med, 4), med < 0
     else:
         med_out = down = None
-    yield pd.DataFrame(
-        [(n_days, s_stat, var_num, _round_half_up(z, 4),
-          abs(z) > 1.96, len(vals), med_out, down)],
-        columns=[f.name for f in TREND_DUO_OUTPUT_SCHEMA.fields])
+    return st, [(n_days, s_stat, var_num, _round_half_up(z, 4),
+                 abs(z) > 1.96, len(vals), med_out, down)]
+
+
+_trend_duo_update = _fold_update(
+    _trend_duo_fold, TREND_DUO_STATE_SCHEMA, TREND_DUO_OUTPUT_SCHEMA,
+    (0, 0, 0, 0, -1, "", "", ""), order=("d",),
+    daily="trend_duo_tracker")
 
 
 def trend_duo_tracker(daily: DataFrame) -> DataFrame:
@@ -2226,13 +1876,7 @@ def trend_duo_tracker(daily: DataFrame) -> DataFrame:
 
     src = daily.select(F.lit(0).alias("g"), "d",
                        F.col("y").cast("bigint").alias("y"))
-    return src.groupBy("g").applyInPandasWithState(
-        _trend_duo_update,
-        outputStructType=TREND_DUO_OUTPUT_SCHEMA,
-        stateStructType=TREND_DUO_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _apply_fold(src, _trend_duo_update, "g")
 
 
 # ---------------------------------------------------------------------------
@@ -2274,51 +1918,41 @@ def _tdiv(a: int, d: int) -> int:
     return a // d if a >= 0 else -((-a) // d)
 
 
-def _ph_update(
-    key: tuple,
-    batches: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
+def _ph_fold(key, st, days):
     """Replays stats_page_hinkley_drift's integer recurrence across
     micro-batches: running mean mean_t = s_t div t (NOT a frozen
     warm-up mu — the defining difference from the CUSUM tracker two
     sections up), one-sided unclamped sums with 1% slack, extrema
     tracked, alarm the first step the excursion exceeds mean_t div 4.
-    concat-then-sort-once per batch (the beacon-tracker discipline) so
-    Arrow chunking cannot reorder days; cross-batch the day-ordered
-    delivery of CLOSED daily totals is ENFORCED via the state's
-    last_day watermark — a late or replayed day raises instead of
-    silently corrupting the recurrence (r13)."""
-    (event_type,) = key
-    n, s, mup, mnm, mdn, mxm, aup, adn, last_day = (
-        state.get if state.exists else (0, 0, 0, 0, 0, 0, -1, -1, ""))
-    last_day = last_day or ""
-    chunks = [c for c in batches if len(c)]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True).sort_values("d")
-        for d_v, cents_v in zip(pdf["d"], pdf["cents"].astype("int64")):
-            d = _day_str(d_v)
-            _check_day_order("page_hinkley_tracker", d, last_day)
-            last_day = d
-            x = int(cents_v)
-            s += x
-            n += 1
-            mean = _tdiv(s, n)
-            slack = _tdiv(mean, 100)
-            lam = _tdiv(mean, 4)
-            mup = mup + x - mean - slack
-            mnm = min(mnm, mup)
-            mdn = mdn + x - mean + slack
-            mxm = max(mxm, mdn)
-            if aup < 0 and mup - mnm > lam:
-                aup = n
-            if adn < 0 and mxm - mdn > lam:
-                adn = n
-    state.update((n, s, mup, mnm, mdn, mxm, aup, adn, last_day))
-    yield pd.DataFrame(
-        [(event_type, n, mup - mnm, mxm - mdn, aup, adn)],
-        columns=[f.name for f in PH_OUTPUT_SCHEMA.fields],
-    )
+    The harness sorts each batch by day so Arrow chunking cannot
+    reorder days; cross-batch the day-ordered delivery of CLOSED daily
+    totals is ENFORCED via the state's last_day watermark — a late or
+    replayed day raises instead of silently corrupting the recurrence
+    (r13)."""
+    n, s, mup, mnm, mdn, mxm, aup, adn = st
+    for cents_v in days["cents"].astype("int64"):
+        x = int(cents_v)
+        s += x
+        n += 1
+        mean = _tdiv(s, n)
+        slack = _tdiv(mean, 100)
+        lam = _tdiv(mean, 4)
+        mup = mup + x - mean - slack
+        mnm = min(mnm, mup)
+        mdn = mdn + x - mean + slack
+        mxm = max(mxm, mdn)
+        if aup < 0 and mup - mnm > lam:
+            aup = n
+        if adn < 0 and mxm - mdn > lam:
+            adn = n
+    return (n, s, mup, mnm, mdn, mxm, aup, adn), [
+        (key[0], n, mup - mnm, mxm - mdn, aup, adn)]
+
+
+_ph_update = _fold_update(
+    _ph_fold, PH_STATE_SCHEMA, PH_OUTPUT_SCHEMA,
+    (0, 0, 0, 0, 0, 0, -1, -1, ""), order=("d",),
+    daily="page_hinkley_tracker")
 
 
 def page_hinkley_tracker(daily: DataFrame) -> DataFrame:
@@ -2343,13 +1977,7 @@ def page_hinkley_tracker(daily: DataFrame) -> DataFrame:
     (truncate toward zero) to mirror Spark `div` / DuckDB `//` exactly
     even on a negative series.
     """
-    return daily.groupBy("event_type").applyInPandasWithState(
-        _ph_update,
-        outputStructType=PH_OUTPUT_SCHEMA,
-        stateStructType=PH_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _apply_fold(daily, _ph_update, "event_type")
 
 
 # ---------------------------------------------------------------------------
@@ -2380,48 +2008,36 @@ EWMA_CHART_OUTPUT_SCHEMA = StructType(
 )
 
 
-def _ewma_chart_update(
-    key: tuple,
-    batches: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
+def _ewma_chart_fold(key, st, days):
     """Replays stats_ewma_control_chart's integer recurrence across
     micro-batches: 7-day warm-up freezes the center mu and seeds z,
     then z' = (3z + x) div 4 with an alarm the first day |z - mu|
-    leaves the mu div 8 band. concat-then-sort-once per batch (the
-    beacon-tracker discipline) so Arrow chunking cannot reorder days;
-    cross-batch the day-ordered delivery of CLOSED daily totals is
-    ENFORCED via the state's last_day watermark — a late or replayed
-    day raises instead of silently corrupting the recurrence (r13)."""
-    (event_type,) = key
-    n, warm, mu, z, mx, alarm, last_day = (
-        state.get if state.exists else (0, 0, 0, 0, 0, -1, ""))
-    last_day = last_day or ""
-    chunks = [c for c in batches if len(c)]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True).sort_values("d")
-        for d_v, cents_v in zip(pdf["d"], pdf["cents"].astype("int64")):
-            d = _day_str(d_v)
-            _check_day_order("ewma_chart_tracker", d, last_day)
-            last_day = d
-            x = int(cents_v)
-            if n < 6:
-                n, warm = n + 1, warm + x
-            elif n == 6:
-                n, warm = 7, warm + x
-                mu = z = _tdiv(warm, 7)
-            else:
-                n += 1
-                z = _tdiv(3 * z + x, 4)
-                exc = abs(z - mu)
-                mx = max(mx, exc)
-                if alarm < 0 and exc > _tdiv(mu, 8):
-                    alarm = n
-    state.update((n, warm, mu, z, mx, alarm, last_day))
-    yield pd.DataFrame(
-        [(event_type, n, mu, z, mx, alarm)],
-        columns=[f.name for f in EWMA_CHART_OUTPUT_SCHEMA.fields],
-    )
+    leaves the mu div 8 band. The harness sorts each batch by day so
+    Arrow chunking cannot reorder days; cross-batch the day-ordered
+    delivery of CLOSED daily totals is ENFORCED via the state's
+    last_day watermark — a late or replayed day raises instead of
+    silently corrupting the recurrence (r13)."""
+    n, warm, mu, z, mx, alarm = st
+    for cents_v in days["cents"].astype("int64"):
+        x = int(cents_v)
+        if n < 6:
+            n, warm = n + 1, warm + x
+        elif n == 6:
+            n, warm = 7, warm + x
+            mu = z = _tdiv(warm, 7)
+        else:
+            n += 1
+            z = _tdiv(3 * z + x, 4)
+            exc = abs(z - mu)
+            mx = max(mx, exc)
+            if alarm < 0 and exc > _tdiv(mu, 8):
+                alarm = n
+    return (n, warm, mu, z, mx, alarm), [(key[0], n, mu, z, mx, alarm)]
+
+
+_ewma_chart_update = _fold_update(
+    _ewma_chart_fold, EWMA_CHART_STATE_SCHEMA, EWMA_CHART_OUTPUT_SCHEMA,
+    (0, 0, 0, 0, 0, -1, ""), order=("d",), daily="ewma_chart_tracker")
 
 
 def ewma_chart_tracker(daily: DataFrame) -> DataFrame:
@@ -2448,10 +2064,4 @@ def ewma_chart_tracker(daily: DataFrame) -> DataFrame:
     through _tdiv (truncate toward zero) to mirror Spark `div` /
     DuckDB `//` exactly even on a negative series.
     """
-    return daily.groupBy("event_type").applyInPandasWithState(
-        _ewma_chart_update,
-        outputStructType=EWMA_CHART_OUTPUT_SCHEMA,
-        stateStructType=EWMA_CHART_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _apply_fold(daily, _ewma_chart_update, "event_type")
